@@ -4,5 +4,9 @@ iterative algorithms are driver-looped DataFrame join/agg rounds with
 localCheckpoint-based lineage truncation, so they scale with the
 cluster rather than a single machine's RAM (the reference pickles a
 4.6M-node igraph object whole; ref: infrastructure/repositories/
-graph_repo.py:12-63).
+graph_repo.py:12-63). ``iterate.py`` holds the row-count broadcast
+guard, the |V|-tracking partition count and the propagation step
+(score frame ⋈ edges, summed by the other endpoint) that the
+power-iteration operators share; ``build.vertices`` is the vertex set
+of an edge list.
 """

@@ -114,3 +114,14 @@ def undirected(edges: DataFrame) -> DataFrame:
         *[F.col(c) for c in edges.columns if c not in ("src", "dst")],
     )
     return fwd.unionByName(rev)
+
+
+def vertices(edges: DataFrame, a: str = "src", b: str = "dst") -> DataFrame:
+    """Vertex set (id) of an edge list: the distinct union of both
+    endpoint columns. Lazy — each caller picks its own persist or
+    checkpoint."""
+    return (
+        edges.select(F.col(a).alias("id"))
+        .unionAll(edges.select(F.col(b).alias("id")))
+        .dropDuplicates()
+    )

@@ -40,9 +40,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from social_link_prediction_spark.graph import iterate
+from social_link_prediction_spark.graph.build import vertices
 
-_BROADCAST_GUARD = 2_000_000  # rows; same guard discipline as graph/pagerank.py
-# The backward phase broadcasts LEVEL frames, which reach |sources|x|V|
+
+# The forward frontier is hinted under the graph/iterate.py guard. The
+# backward phase broadcasts LEVEL frames, which reach |sources|x|V|
 # rows (the level-3 frame is ~400k rows at sf0.1) — collecting one to
 # the driver to build the broadcast relation is serial driver time, so
 # the hint gets a much tighter cap than the forward frontier's (r10;
@@ -78,7 +81,7 @@ def betweenness_sampled(
     visited = lv0.select("source", "node")
     frontier = lv0
     for d in range(1, max_depth + 1):
-        f = F.broadcast(frontier) if counts[-1] <= _BROADCAST_GUARD else frontier
+        f = iterate.hint(frontier, counts[-1])
         nxt = (
             f.join(e, f["node"] == e["src"])
             .groupBy("source", F.col("dst").alias("node"))
@@ -139,6 +142,11 @@ def betweenness_sampled(
             .localCheckpoint()
         )
         deps.append(delta)
+    # the deltas are checkpointed: nothing downstream reads the levels
+    # or the edge frame again
+    for lv in levels:
+        lv.unpersist()
+    e.unpersist()
 
     if not deps:
         return lv0.sparkSession.createDataFrame([], "id long, betweenness double")
@@ -169,10 +177,10 @@ def katz_centrality(
     computes the walk sum truncated at length ``rounds`` (exact Katz as
     rounds→inf when alpha < 1/lambda_max). Unlike PageRank there is no
     degree normalization, so the scores frame never needs out-degrees —
-    each round is ONE keyed join (scores onto edge sources) and ONE
-    keyed sum (by destination), the same two shuffles HITS pays per
-    side. Reference analog: the reference ranks people by raw
-    connection influence (core/analysis/graph_analysis.py degree/
+    each round is one graph/iterate.push: ONE keyed join (scores onto
+    edge sources) and ONE keyed sum (by destination), the same round
+    HITS pays per side. Reference analog: the reference ranks people
+    by raw connection influence (core/analysis/graph_analysis.py degree/
     pagerank family); Katz is the walk-damped member of that family.
 
     Scale shape: ``edges`` is persisted once and every round's join
@@ -191,19 +199,11 @@ def katz_centrality(
         .dropDuplicates()
         .persist()
     )
-    vtx = (
-        e.select(F.col("u").alias("id"))
-        .unionByName(e.select(F.col("v").alias("id")))
-        .distinct()
-        .persist()
-    )
+    vtx = vertices(e, "u", "v").persist()
+    n = vtx.count()
     x = vtx.select("id", F.lit(1.0).alias("x"))
     for _ in range(rounds):
-        inflow = (
-            e.join(x.withColumnRenamed("id", "u"), "u")
-            .groupBy(F.col("v").alias("id"))
-            .agg(F.sum("x").alias("s"))
-        )
+        inflow = iterate.push(e, x.withColumnRenamed("x", "s"), "u", "v", "s", n)
         x = vtx.join(inflow, "id", "left").select(
             "id",
             (F.lit(1.0) + F.lit(alpha) * F.coalesce(F.col("s"), F.lit(0.0))).alias(
@@ -259,19 +259,11 @@ def eigenvector_centrality(
         .dropDuplicates()
         .persist()
     )
-    vtx = (
-        e.select(F.col("u").alias("id"))
-        .unionByName(e.select(F.col("v").alias("id")))
-        .distinct()
-        .persist()
-    )
+    vtx = vertices(e, "u", "v").persist()
+    n = vtx.count()
     x = vtx.select("id", F.lit(1.0).alias("x"))
     for _ in range(rounds):
-        inflow = (
-            e.join(x.withColumnRenamed("id", "u"), "u")
-            .groupBy(F.col("v").alias("id"))
-            .agg(F.sum("x").alias("s"))
-        )
+        inflow = iterate.push(e, x.withColumnRenamed("x", "s"), "u", "v", "s", n)
         y = (
             vtx.join(inflow, "id", "left")
             .select("id", F.coalesce(F.col("s"), F.lit(0.0)).alias("y"))

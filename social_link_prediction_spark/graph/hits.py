@@ -22,10 +22,11 @@ Not in the reference (its centrality stops at PageRank,
 core/ai/data_processor.py:35-107); added because hub/authority is the
 natural asymmetric-importance measure for a directed social graph.
 
-Scale shape (same discipline as graph/pagerank.py): the edge table is
-persisted once and its src/dst partitioning is reused by every round's
-join; only the |V|-row score frames move, broadcast-hinted under the
-same 2M-row guard; localCheckpoint once per round truncates lineage.
+Scale shape (same round as graph/pagerank.py, graph/iterate.push): the
+edge table is persisted once and its src/dst partitioning is reused by
+every round's join; only the |V|-row score frames move, broadcast-hinted
+under the graph/iterate.py guard; localCheckpoint once per round
+truncates lineage.
 """
 
 from __future__ import annotations
@@ -33,13 +34,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from social_link_prediction_spark.graph import iterate
+from social_link_prediction_spark.graph.build import vertices
+
 
 def hits(
     edges: DataFrame,
     iterations: int = 5,
     src: str = "src",
     dst: str = "dst",
-    broadcast_max_rows: int = 2_000_000,
 ) -> DataFrame:
     """Fixed-iteration sum-normalized HITS. Returns (id, hub, auth)
     for every vertex (union of endpoints); vertices with no out-edges
@@ -51,29 +54,18 @@ def hits(
         .dropDuplicates()
         .persist()
     )
-    nodes = (
-        e.select(F.col("src").alias("id"))
-        .unionAll(e.select(F.col("dst").alias("id")))
-        .dropDuplicates()
-        .cache()
-    )
+    nodes = vertices(e).cache()
     n = nodes.count()
-    maybe_bc = (lambda df: F.broadcast(df)) if n <= broadcast_max_rows else (lambda df: df)
-    # |V|-tracking partition count for the score frames (one partition
-    # per ~500k rows, up to the session parallelism) — same rationale
-    # as graph/pagerank.py.
-    n_part = max(1, min(e.sparkSession.sparkContext.defaultParallelism, n // 500_000 + 1))
 
-    hub = nodes.withColumn("hub", F.lit(1.0)).coalesce(n_part).localCheckpoint()
+    hub = (
+        nodes.withColumn("hub", F.lit(1.0))
+        .coalesce(iterate.partitions(e, n))
+        .localCheckpoint()
+    )
     auth = None
     for i in range(iterations):
         # auth step: hub mass flows src -> dst.
-        auth = (
-            e.join(maybe_bc(hub.select(F.col("id").alias("src"), "hub")), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("hub").alias("auth"))
-            .coalesce(n_part)
-        )
+        auth = iterate.push(e, hub.withColumnRenamed("hub", "auth"), "src", "dst", "auth", n)
         # The last round's auth feeds both the final join and the final
         # sum — checkpoint it then; mid-loop auths are consumed exactly
         # once (by the hub step below), so one checkpoint per round
@@ -81,16 +73,12 @@ def hits(
         if i == iterations - 1:
             auth = auth.localCheckpoint()
         # hub step: the new auth mass flows back dst -> src.
-        hub = (
-            e.join(maybe_bc(auth.select(F.col("id").alias("dst"), "auth")), "dst")
-            .groupBy(F.col("src").alias("id"))
-            .agg(F.sum("auth").alias("hub"))
-            .coalesce(n_part)
-            .localCheckpoint()
-        )
+        hub = iterate.push(
+            e, auth.withColumnRenamed("auth", "hub"), "dst", "src", "hub", n
+        ).localCheckpoint()
     raw = (
-        nodes.join(maybe_bc(hub), "id", "left")
-        .join(maybe_bc(auth), "id", "left")
+        nodes.join(iterate.hint(hub, n), "id", "left")
+        .join(iterate.hint(auth, n), "id", "left")
         .select(
             "id",
             F.coalesce("hub", F.lit(0.0)).alias("hub"),

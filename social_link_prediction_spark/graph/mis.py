@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from social_link_prediction_spark.graph.build import vertices
 from social_link_prediction_spark.ml.linksplit import hash60
 
 
@@ -153,17 +154,9 @@ def luby_coloring(
         )
         if c + 1 < colors:
             isolated = (
-                pairs.select(F.col("u").alias("id"))
-                .unionAll(pairs.select(F.col("v").alias("id")))
-                .dropDuplicates()
+                vertices(pairs, "u", "v")
                 .join(colored, "id", "anti")
-                .join(
-                    remaining.select(F.col("u").alias("id"))
-                    .unionAll(remaining.select(F.col("v").alias("id")))
-                    .dropDuplicates(),
-                    "id",
-                    "anti",
-                )
+                .join(vertices(remaining, "u", "v"), "id", "anti")
                 .select("id", F.lit(c + 1).alias("color"))
                 .localCheckpoint()
             )
@@ -177,12 +170,7 @@ def luby_coloring(
             # [0, colors-1], so promotion is skipped and those nodes
             # return color NULL with the other budget-exhausted nodes.
             out = out.unionAll(isolated).localCheckpoint()
-    nodes = (
-        pairs.select(F.col("u").alias("id"))
-        .unionAll(pairs.select(F.col("v").alias("id")))
-        .dropDuplicates()
-    )
-    leftover = nodes.join(out.select("id"), "id", "anti").withColumn(
+    leftover = vertices(pairs, "u", "v").join(out.select("id"), "id", "anti").withColumn(
         "color", F.lit(None).cast("int")
     )
     return out.unionAll(leftover)

@@ -20,6 +20,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from social_link_prediction_spark.graph import iterate
+from social_link_prediction_spark.graph.build import vertices
+
 
 def _oriented(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """Distinct low→high orientation of an undirected edge list
@@ -55,7 +58,7 @@ def _triangles_oriented(e: DataFrame) -> DataFrame:
 # Node cap for the broadcast-adjacency device: past this the per-vertex
 # arrays could approach Spark's 8 GB broadcast-relation cap, so callers
 # fall back to the wedge-join path instead of failing mid-broadcast.
-_ADJ_MAX_NODES = 2_000_000
+_ADJ_MAX_NODES = iterate.BROADCAST_MAX_ROWS
 
 
 def _oriented_adjacency(e: DataFrame) -> DataFrame:
@@ -80,16 +83,11 @@ def _oriented_adjacency(e: DataFrame) -> DataFrame:
 
 def _nodes_bounded(e: DataFrame, cap: int) -> bool:
     """True iff the oriented edge list has <= cap distinct vertices.
-    One short-circuiting probe job: distinct + limit(cap+1) stops
-    counting past the cap instead of materializing the full dedup."""
-    n = (
-        e.select(F.col("a").alias("id"))
-        .unionAll(e.select(F.col("b").alias("id")))
-        .dropDuplicates()
-        .limit(cap + 1)
-        .count()
-    )
-    return n <= cap
+    One probe job, and not a short-circuiting one: the distinct
+    aggregation over both endpoint columns runs in full (its shuffle
+    finishes before any row reaches the limit); limit(cap+1) only
+    bounds the rows the final count reads."""
+    return vertices(e, "a", "b").limit(cap + 1).count() <= cap
 
 
 def triangle_count(

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from social_link_prediction_spark.graph.build import vertices
 from social_link_prediction_spark.graph.pagerank import connected_components
 
 
@@ -55,9 +56,7 @@ def boruvka_mst(
         .localCheckpoint()
     )
     comp = (
-        e.select(F.col("u").alias("id"))
-        .unionByName(e.select(F.col("v").alias("id")))
-        .distinct()
+        vertices(e, "u", "v")
         .select("id", F.col("id").alias("comp"))
         .localCheckpoint()
     )

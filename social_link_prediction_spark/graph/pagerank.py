@@ -18,46 +18,29 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from social_link_prediction_spark.graph import iterate
+from social_link_prediction_spark.graph.build import vertices
 
-def pagerank(
-    edges: DataFrame,
-    damping: float = 0.85,
-    iterations: int = 10,
-    src: str = "src",
-    dst: str = "dst",
-    broadcast_max_rows: int = 2_000_000,
-) -> DataFrame:
-    """Fixed-iteration PageRank over a directed edge list. Returns
-    (id, pagerank). Vertices = union of endpoints. Dangling nodes'
-    mass is spread uniformly each iteration (classic formulation), so
-    ranks sum to 1 every round.
 
-    When the vertex set is small (≤ broadcast_max_rows — the count is
-    already computed for the 1/n seed), the per-iteration rank and
-    contribution frames are broadcast-hinted: the big edge table then
-    never re-sorts/re-shuffles inside the loop, and each round costs
-    one contribution shuffle instead of three. Past the threshold the
-    loop stays fully shuffle-based — ranks are |V| rows and must not
-    be broadcast on a billion-node graph.
-    """
-    # Cache (lazily) the edge list up front: nodes, out-degrees, and
-    # the weighted edge table all derive from it, and without this the
-    # upstream plan (scans, dedups, joins) re-executes for each.
-    # persist() over localCheckpoint(): same reuse once materialized,
-    # but no dedicated up-front materialization job — the first reader
-    # (the nodes count below) pays it as part of its own job. Lineage
-    # here is one select over the input, so checkpoint's truncation
-    # buys nothing.
+def _setup(edges: DataFrame, src: str, dst: str):
+    """Shared setup of :func:`pagerank` and :func:`personalized_pagerank`:
+    (e, deg, outdeg, n, n_src, n_dst) — the 2-column edge list, the
+    (id, od, has_in) degree frame, the (id, od) frame of vertices with
+    out-edges, and the vertex / source / sink counts."""
+    # Cache (lazily) the edge list up front: the degrees and every
+    # round's join derive from it, and without this the upstream plan
+    # (scans, dedups, joins) re-executes for each. persist() over
+    # localCheckpoint(): same reuse once materialized, but no dedicated
+    # up-front materialization job — the first reader (the counts
+    # below) pays it as part of its own job. Lineage here is one select
+    # over the input, so checkpoint's truncation buys nothing.
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).persist()
     # ONE (id, out-degree, has-in-edge) aggregation replaces the three
     # separate setup passes the r9 shape paid (nodes dedup + count, the
     # dangling/sourceless countDistinct probe, and the out-degree
     # groupBy): ~5.9M rows shuffled in setup drops to ~2.4M at bench
     # scale and three probe jobs become one (r10; A/B 1.14x med).
-    # Out-degree still attaches to the RANK frame (|V| rows), not the
-    # edge table — ranks ⋈ outdeg is a small-small join, so the big
-    # edge table is never materialized with an extra column and each
-    # round scans the 2-column persisted edges directly.
+    # All three counts read the one materialized degree frame.
     deg = (
         e.select(F.col("src").alias("id"), F.lit(1).alias("o"))
         .unionAll(e.select(F.col("dst").alias("id"), F.lit(0).alias("o")))
@@ -68,37 +51,68 @@ def pagerank(
         )
         .persist()
     )
+    row = deg.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum((F.col("od") > 0).cast("long")).alias("n_src"),
+        F.sum("has_in").cast("long").alias("n_dst"),
+    ).first()
+    n = row["n"]
+    # Out-degree attaches to the RANK frame (|V| rows), not the edge
+    # table — ranks ⋈ outdeg is a small-small join, so the big edge
+    # table is never materialized with an extra column and each round
+    # scans the 2-column persisted edges directly. It is materialized
+    # once, before the loop: re-deriving it lazily from deg in every
+    # round inlined the cached degree frame into each round's plan
+    # (29 InMemoryRelations in pagerank_partsupp's plan, 4 now), and a
+    # persist() instead of the checkpoint costs two more jobs at 2
+    # iterations (AQE builds the cache in its own stage jobs).
+    outdeg = (
+        deg.filter(F.col("od") > 0)
+        .select("id", "od")
+        .coalesce(iterate.partitions(e, n))
+        .localCheckpoint()
+    )
+    return e, deg, outdeg, n, row["n_src"], row["n_dst"]
+
+
+def _flow(ranks: DataFrame, outdeg: DataFrame) -> DataFrame:
+    """Per-vertex outgoing share pr/od, on the |V|-row side."""
+    return ranks.join(outdeg, "id").select("id", (F.col("pr") / F.col("od")).alias("flow"))
+
+
+def pagerank(
+    edges: DataFrame,
+    damping: float = 0.85,
+    iterations: int = 10,
+    src: str = "src",
+    dst: str = "dst",
+) -> DataFrame:
+    """Fixed-iteration PageRank over a directed edge list. Returns
+    (id, pagerank). Vertices = union of endpoints; duplicate edges
+    count. Dangling nodes' mass is spread uniformly each iteration
+    (classic formulation), so ranks sum to 1 every round. An empty
+    edge list gives an empty frame.
+
+    When the vertex set is small (under the graph/iterate.py guard —
+    the count is already computed for the 1/n seed), the per-iteration
+    rank and contribution frames are broadcast-hinted: the big edge
+    table then never re-sorts/re-shuffles inside the loop, and each
+    round costs one contribution shuffle instead of three.
+    """
+    e, deg, outdeg, n, n_src, n_dst = _setup(edges, src, dst)
+    if n == 0:
+        # no edges, no vertices: empty, with the input's id type
+        return e.select(F.col("src").alias("id"), F.lit(0.0).alias("pagerank"))
     # Dangling nodes (no out-edges) exist iff some vertex never appears
     # as a src; sourceless nodes (no in-edges) iff some vertex never
     # appears as a dst. On symmetric graphs (the common case here:
     # undirected part-supplier / co-occurrence views) neither exists,
     # and both per-iteration fixups — the dangling-mass aggregation and
     # the completeness join (nodes ⟕ contribs, a full |V| shuffle per
-    # round on big directed graphs) — can be skipped. All three counts
-    # read the one materialized degree frame.
-    row = deg.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum((F.col("od") > 0).cast("long")).alias("n_src"),
-        F.sum("has_in").cast("long").alias("n_dst"),
-    ).first()
-    n, n_src, n_dst = row["n"], row["n_src"], row["n_dst"]
-    # |V|-sized frames get a partition count that tracks |V| (one
-    # partition per ~500k rows), not the session's shuffle setting —
-    # a 4k-row rank frame has no business occupying 32 shuffle
-    # partitions' worth of per-round task launches and checkpoint
-    # blocks, and at 1e9 vertices the same formula returns to full
-    # parallelism. coalesce() narrows the shuffle read without adding
-    # an exchange.
-    n_part = max(1, min(e.sparkSession.sparkContext.defaultParallelism, n // 500_000 + 1))
+    # round on big directed graphs) — can be skipped.
     nodes = deg.select("id")
-    outdeg = deg.filter(F.col("od") > 0).select(F.col("id").alias("src"), "od")
     has_dangling = n_src < n
     has_sourceless = n_dst < n
-
-    small = n <= broadcast_max_rows
-
-    def _v(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if small else df
 
     # Checkpoint cadence. When dangling/sourceless machinery is live,
     # contribs is read twice per round (dangling-mass agg + rank join),
@@ -113,18 +127,11 @@ def pagerank(
     every_round = has_dangling or has_sourceless
     ranks = nodes.withColumn("pr", F.lit(1.0 / n))
     for it in range(iterations):
-        r_od = ranks.withColumnRenamed("id", "src").join(outdeg, "src")
-        contribs = (
-            e.join(_v(r_od), "src")
-            .select(F.col("dst").alias("id"), (F.col("pr") / F.col("od")).alias("c"))
-            .groupBy("id")
-            .agg(F.sum("c").alias("flow"))
-            .coalesce(n_part)
-        )
+        contribs = iterate.push(e, _flow(ranks, outdeg), "src", "dst", "flow", n)
         if every_round or it % 3 == 2:
             contribs = contribs.localCheckpoint()
         if has_sourceless:
-            base = nodes.join(_v(contribs), "id", "left").na.fill({"flow": 0.0})
+            base = nodes.join(iterate.hint(contribs, n), "id", "left").na.fill({"flow": 0.0})
         else:
             base = contribs
         if has_dangling:
@@ -157,13 +164,12 @@ def personalized_pagerank(
     iterations: int = 10,
     src: str = "src",
     dst: str = "dst",
-    broadcast_max_rows: int = 2_000_000,
 ) -> DataFrame:
     """Personalized PageRank: the restart mass returns to ``sources``
     (uniformly) instead of spreading over all vertices — rank becomes
     proximity-to-the-seed, the standard recommendation/similarity
     centrality (what the reference's hub-penalized recommendation
-    approximates locally). Same loop discipline as :func:`pagerank`:
+    approximates locally). Same setup and round as :func:`pagerank`:
     one contribution shuffle per round, broadcast rank frames while
     they're small, lineage kept shallow.
 
@@ -171,50 +177,27 @@ def personalized_pagerank(
     used here); on general digraphs compose with the dangling fixups
     of :func:`pagerank`.
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).persist()
-    nodes = (
-        e.select(F.col("src").alias("id"))
-        .unionAll(e.select(F.col("dst").alias("id")))
-        .dropDuplicates()
-        .cache()
-    )
-    n = nodes.count()
+    e, deg, outdeg, n, _, _ = _setup(edges, src, dst)
     # a typo'd / absent seed would silently contribute no restart mass
     # (the seed term applies via isin over contrib rows) and shrink
-    # every rank with no error — fail loudly instead. One broadcast
-    # semi-count against the already-cached nodes frame.
-    n_found = nodes.filter(F.col("id").isin(list(sources))).count()
-    if n_found != len(set(sources)):
-        missing = set(sources) - {
-            r.id for r in nodes.filter(F.col("id").isin(list(sources))).collect()
-        }
+    # every rank with no error — fail loudly instead. One filter over
+    # the already-cached degree frame.
+    found = {r.id for r in deg.filter(F.col("id").isin(list(sources))).select("id").collect()}
+    missing = set(sources) - found
+    if missing:
         raise ValueError(
             f"personalized_pagerank: seed ids not in the edge list's "
             f"vertex set: {sorted(missing)!r}"
         )
-    # degree on the rank side, not the edge side — see pagerank();
-    # |V|-tracking partition count for the small frames, ditto
-    n_part = max(1, min(e.sparkSession.sparkContext.defaultParallelism, n // 500_000 + 1))
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("od")).coalesce(n_part).persist()
 
     seed_mass = 1.0 / len(sources)
     seed_col = F.when(
         F.col("id").isin(list(sources)), F.lit(seed_mass)
     ).otherwise(F.lit(0.0))
 
-    def _v(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if n <= broadcast_max_rows else df
-
-    ranks = nodes.select("id", seed_col.alias("pr"))
+    ranks = deg.select("id", seed_col.alias("pr"))
     for it in range(iterations):
-        r_od = ranks.withColumnRenamed("id", "src").join(outdeg, "src")
-        contribs = (
-            e.join(_v(r_od), "src")
-            .select(F.col("dst").alias("id"), (F.col("pr") / F.col("od")).alias("c"))
-            .groupBy("id")
-            .agg(F.sum("c").alias("flow"))
-            .coalesce(n_part)
-        )
+        contribs = iterate.push(e, _flow(ranks, outdeg), "src", "dst", "flow", n)
         ranks = contribs.select(
             "id",
             (
@@ -264,12 +247,7 @@ def connected_components(
     min node id reachable, for every id appearing in the edge list.
     """
     pairs = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    nodes = (
-        pairs.select(F.col("u").alias("id"))
-        .unionAll(pairs.select(F.col("v").alias("id")))
-        .dropDuplicates()
-        .localCheckpoint()
-    )
+    nodes = vertices(pairs, "u", "v").localCheckpoint()
     e = pairs.filter(F.col("u") != F.col("v")).dropDuplicates().localCheckpoint()
     prev_sig = None
     for _ in range(max_iterations):

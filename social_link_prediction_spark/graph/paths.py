@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from social_link_prediction_spark.graph.build import undirected
+from social_link_prediction_spark.graph.iterate import hint
 
 
 def multi_source_shortest_paths(
@@ -33,7 +34,6 @@ def multi_source_shortest_paths(
     weight: str | None = None,
     max_hops: int = 8,
     directed: bool = False,
-    broadcast_max_rows: int = 2_000_000,
 ) -> DataFrame:
     """Multi-source weighted SSSP. ``sources`` is a DataFrame with a
     ``source`` column; returns (source, id, dist, parent) — parent
@@ -53,8 +53,8 @@ def multi_source_shortest_paths(
     Frontier and settled-table sizes are tracked driver-side (the
     round's emptiness probe is a count over already-checkpointed data,
     so the sizes are free) and small frames get broadcast hints: the
-    big edge table then never re-sorts inside the loop. Past
-    ``broadcast_max_rows`` the loop stays fully shuffle-based — on a
+    big edge table then never re-sorts inside the loop. Past the
+    graph/iterate.py guard the loop stays fully shuffle-based — on a
     billion-node graph the frontier can approach |V|.
     """
     e = edges if directed else undirected(edges)
@@ -75,13 +75,10 @@ def multi_source_shortest_paths(
     frontier_n = sources.count()
     best_n = frontier_n
 
-    def _small(df: DataFrame, n_rows: int) -> DataFrame:
-        return F.broadcast(df) if n_rows <= broadcast_max_rows else df
-
     for _ in range(max_hops):
         # relax: frontier × out-edges → min candidate per (source, node)
         cand = (
-            _small(frontier, frontier_n).join(e.withColumnRenamed("src", "id"), "id")
+            hint(frontier, frontier_n).join(e.withColumnRenamed("src", "id"), "id")
             .select(
                 "source",
                 F.col("dst").alias("nid"),
@@ -105,7 +102,7 @@ def multi_source_shortest_paths(
         )
         improved = (
             cand.join(
-                _small(bestk, best_n),
+                hint(bestk, best_n),
                 (F.col("source") == F.col("b_source")) & (F.col("nid") == F.col("b_id")),
                 "left",
             )

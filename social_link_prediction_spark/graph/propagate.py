@@ -21,8 +21,9 @@ library, and feed the same downstream scorers (ml/predict.py).
 
 Scale shape: per layer, the feature frame (|V| rows, narrow) joins
 the edge list on src — at 100 TB the features are the small side and
-broadcast under the caller's guard, else both sides hash-shuffle on
-the node id once and every subsequent layer reuses that partitioning.
+broadcast under the graph/iterate.py guard, else both sides
+hash-shuffle on the node id once and every subsequent layer reuses
+that partitioning.
 Isolated nodes (no in-edges) keep their own features (coalesce to
 h_k, the standard convention for mean aggregation over an empty
 neighborhood).
@@ -35,6 +36,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from social_link_prediction_spark.graph.iterate import hint
+
 
 def propagate_features(
     edges: DataFrame,
@@ -45,14 +48,13 @@ def propagate_features(
     id_col: str = "id",
     src: str = "src",
     dst: str = "dst",
-    broadcast_max_rows: int = 2_000_000,
 ) -> DataFrame:
     """Run ``layers`` rounds of mean-aggregation message passing over
     the numeric feature columns ``cols`` of ``feats`` (one row per
     node, keyed by ``id_col``). Returns the final (id, *cols) frame.
 
-    The feature frame is |V| rows; under ``broadcast_max_rows`` it is
-    broadcast into both per-layer joins (the edge table never
+    The feature frame is |V| rows; under the graph/iterate.py guard it
+    is broadcast into both per-layer joins (the edge table never
     shuffles), past the guard the layers run shuffle-based — on a
     billion-node graph the features are no longer the small side.
     """
@@ -60,19 +62,15 @@ def propagate_features(
         raise ValueError(f"alpha must be in [0, 1], got {alpha}")
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     h = feats.select(F.col(id_col).alias("id"), *[F.col(c).cast("double") for c in cols])
-    small = feats.count() <= broadcast_max_rows
-
-    def _sm(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if small else df
-
+    n = feats.count()
     for _ in range(layers):
         msg = (
-            _sm(h).join(e, h["id"] == e["src"])
+            hint(h, n).join(e, h["id"] == e["src"])
             .groupBy(F.col("dst").alias("id"))
             .agg(*[F.avg(c).alias(f"nbr_{c}") for c in cols])
         )
         h = (
-            h.join(_sm(msg), "id", "left")
+            h.join(hint(msg, n), "id", "left")
             .select(
                 "id",
                 *[

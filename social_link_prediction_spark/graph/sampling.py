@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from social_link_prediction_spark.graph.build import vertices
 from social_link_prediction_spark.ml.linksplit import hash60
 
 
@@ -98,10 +99,6 @@ def export_training_blocks(
     blocks.select("hop", "src", "dst").write.mode("overwrite").partitionBy(
         "hop"
     ).parquet(edges_path)
-    touched = (
-        blocks.select(F.col("src").alias("id"))
-        .unionByName(blocks.select(F.col("dst").alias("id")))
-        .dropDuplicates()
-    )
+    touched = vertices(blocks)
     write_embeddings(node_features.join(touched, "id", "left_semi"), nodes_path)
     return {"edges": edges_path, "nodes": nodes_path}

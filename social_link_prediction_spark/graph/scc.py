@@ -42,6 +42,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window  # noqa: F401 (Window: API symmetry)
 from pyspark.sql import functions as F
 
+from social_link_prediction_spark.graph.build import vertices
+
 
 def strongly_connected_components(
     edges: DataFrame,
@@ -68,12 +70,7 @@ def strongly_connected_components(
         .dropDuplicates()
         .localCheckpoint()
     )
-    nodes = (
-        e.select(F.col("u").alias("id"))
-        .unionAll(e.select(F.col("v").alias("id")))
-        .dropDuplicates()
-        .localCheckpoint()
-    )
+    nodes = vertices(e, "u", "v").localCheckpoint()
     resolved: DataFrame | None = None
     active_n, active_e = nodes, e
     for _ in range(peels):

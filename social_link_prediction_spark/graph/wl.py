@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from social_link_prediction_spark.graph.build import vertices
 from social_link_prediction_spark.ml.linksplit import hash60
 
 
@@ -50,9 +51,7 @@ def wl_refinement_history(
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).persist()
     labels = (
-        e.select(F.col("src").alias("id"))
-        .unionAll(e.select(F.col("dst").alias("id")))
-        .dropDuplicates()
+        vertices(e)
         .withColumn("label", F.lit("1"))
         .localCheckpoint()
     )

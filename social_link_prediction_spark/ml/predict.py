@@ -15,6 +15,7 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from social_link_prediction_spark.graph.iterate import hint
 from social_link_prediction_spark.operators.aggregates import total_degree
 from social_link_prediction_spark.pipelines.similarity import cosine_similarity
 
@@ -29,7 +30,6 @@ def pair_features(
     edges: DataFrame,
     vertices: DataFrame | None = None,
     embeddings: DataFrame | None = None,
-    broadcast_max_rows: int = 2_000_000,
     distinct_edges: bool = False,
     edges_symmetric: bool = False,
     max_neighbor_degree: int | None = None,
@@ -74,9 +74,6 @@ def pair_features(
         und.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("deg")).persist()
     )
 
-    def _dim(df: DataFrame, n_rows: int) -> DataFrame:
-        return F.broadcast(df) if n_rows <= broadcast_max_rows else df
-
     n_deg = deg.count()
 
     # encode_ids: dictionary-encode node ids to longs for everything
@@ -102,7 +99,7 @@ def pair_features(
             cols = [F.col("id").alias(alias_id), F.col("nid").alias(alias_nid)]
             if with_deg:
                 cols.append(F.col("deg").alias(with_deg))
-            return _dim(ndict.select(*cols), n_deg)
+            return hint(ndict.select(*cols), n_deg)
 
         # Encode the pair frame once; it feeds the adjacency
         # restriction and the final feature join, so persist it. LEFT
@@ -129,7 +126,7 @@ def pair_features(
         # generation: the adjacency is |E'| rows while the wedge set is
         # Σ C(deg, 2) — on dense blocks orders of magnitude larger.
         adj = und.select(F.col("src").alias("node"), F.col("dst").alias("nbr")).join(
-            _dim(deg.select(F.col("id").alias("nbr"), F.col("deg").alias("nbr_deg")), n_deg),
+            hint(deg.select(F.col("id").alias("nbr"), F.col("deg").alias("nbr_deg")), n_deg),
             "nbr",
         )
 
@@ -176,12 +173,12 @@ def pair_features(
         .drop("lo", "hi", "src_nid", "dst_nid")
         .na.fill({"common_neighbors": 0, "adamic_adar": 0.0})
         .join(
-            _dim(deg.select(F.col("id").alias("src"), F.col("deg").alias("src_deg")), n_deg),
+            hint(deg.select(F.col("id").alias("src"), F.col("deg").alias("src_deg")), n_deg),
             "src",
             "left",
         )
         .join(
-            _dim(deg.select(F.col("id").alias("dst"), F.col("deg").alias("dst_deg")), n_deg),
+            hint(deg.select(F.col("id").alias("dst"), F.col("deg").alias("dst_deg")), n_deg),
             "dst",
             "left",
         )
@@ -271,15 +268,18 @@ def evaluate_link_model(model, labeled_pairs: DataFrame, edges: DataFrame) -> di
     feats = pair_features(labeled_pairs, edges)
     # Each evaluate() is its own action; unpinned, the whole
     # pair-features + transform subtree would execute once per metric
-    # (r10, guide §5.4). Persist for the two passes, then release.
+    # (r10, guide §5.4). Persist for the two passes, then release —
+    # on the error path too.
     scored = model.transform(feats).persist()
     out = {}
-    for metric in ("areaUnderROC", "areaUnderPR"):
-        ev = BinaryClassificationEvaluator(
-            rawPredictionCol="rawPrediction", labelCol="label", metricName=metric
-        )
-        out[metric] = ev.evaluate(scored)
-    scored.unpersist()
+    try:
+        for metric in ("areaUnderROC", "areaUnderPR"):
+            ev = BinaryClassificationEvaluator(
+                rawPredictionCol="rawPrediction", labelCol="label", metricName=metric
+            )
+            out[metric] = ev.evaluate(scored)
+    finally:
+        scored.unpersist()
     return out
 
 

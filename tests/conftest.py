@@ -116,3 +116,16 @@ def documents_df(spark):
     t2[0] = "omega"
     rows.append((102, " ".join(t2)))
     return spark.createDataFrame(rows, ["doc_id", "text"])
+
+
+@pytest.fixture
+def cached_rdd_ids(spark):
+    """Callable returning the ids of the session's cached RDDs. Local
+    checkpoints are left out: they also register as persistent RDDs,
+    and a returned frame may legitimately still read them."""
+
+    def ids() -> set[int]:
+        rdds = spark.sparkContext._jsc.getPersistentRDDs()
+        return {k for k in rdds.keys() if not rdds[k].rdd().isLocallyCheckpointed()}
+
+    return ids

@@ -3,6 +3,7 @@ components, ego — FIXTURES.md invariants 1, 8, 9."""
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from social_link_prediction_spark.graph import build as gb
@@ -340,18 +341,104 @@ def test_betweenness_diamond_split_paths(spark):
     assert out == {2: 0.5, 3: 0.5}
 
 
-def test_betweenness_guard_shuffle_path_matches_broadcast(spark, monkeypatch):
+def _guard_case(op, e, seeds):
+    """One operator run on the 5-path as a flat {key: float} map."""
+    from social_link_prediction_spark.graph import centrality as gc
+    from social_link_prediction_spark.graph import hits as gh
+
+    if op == "betweenness_sampled":
+        rows = gc.betweenness_sampled(e, seeds, max_depth=4).collect()
+        return {r.id: r.betweenness for r in rows}
+    if op == "pagerank":
+        return {r.id: r.pagerank for r in gpr.pagerank(e, iterations=3).collect()}
+    if op == "hits":
+        rows = gh.hits(e, iterations=2).collect()
+        return {**{(r.id, "hub"): r.hub for r in rows}, **{(r.id, "auth"): r.auth for r in rows}}
+    if op == "katz_centrality":
+        return {r.id: r.katz for r in gc.katz_centrality(e, rounds=3).collect()}
+    rows = gp.multi_source_shortest_paths(e, seeds, max_hops=4).collect()
+    return {(r.source, r.id, r.parent): r.dist for r in rows}
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        "betweenness_sampled",
+        "pagerank",
+        "hits",
+        "katz_centrality",
+        "multi_source_shortest_paths",
+    ],
+)
+def test_betweenness_guard_shuffle_path_matches_broadcast(spark, monkeypatch, op):
     # Above the row guard the loops fall back to shuffle joins; the
     # numbers must not depend on which join strategy ran.
-    from social_link_prediction_spark.graph import centrality as gc
+    from social_link_prediction_spark.graph import iterate
 
     und = [(i, i + 1) for i in range(1, 5)] + [(i + 1, i) for i in range(1, 5)]
     e = spark.createDataFrame(und, ["src", "dst"])
     seeds = spark.createDataFrame([(i,) for i in range(1, 6)], ["source"])
-    expected = {r.id: r.betweenness for r in gc.betweenness_sampled(e, seeds, max_depth=4).collect()}
-    monkeypatch.setattr(gc, "_BROADCAST_GUARD", 0)
-    forced = {r.id: r.betweenness for r in gc.betweenness_sampled(e, seeds, max_depth=4).collect()}
-    assert forced == expected == {2: 6.0, 3: 8.0, 4: 6.0}
+    expected = _guard_case(op, e, seeds)
+    monkeypatch.setattr(iterate, "BROADCAST_MAX_ROWS", 0)
+    forced = _guard_case(op, e, seeds)
+    assert expected and forced == pytest.approx(expected)
+    if op == "betweenness_sampled":
+        assert forced == expected == {2: 6.0, 3: 8.0, 4: 6.0}
+
+
+def test_betweenness_releases_its_frames(spark, cached_rdd_ids):
+    # The levels and the edge frame are dead once the backward deltas
+    # are checkpointed; the result reads only the checkpoints.
+    from social_link_prediction_spark.graph import centrality as gc
+
+    und = [(i, i + 1) for i in range(1, 5)] + [(i + 1, i) for i in range(1, 5)]
+    e = spark.createDataFrame(und, ["src", "dst"])
+    seeds = spark.createDataFrame([(1,), (3,)], ["source"])
+    before = cached_rdd_ids()
+    out = gc.betweenness_sampled(e, seeds, max_depth=3)
+    assert cached_rdd_ids() - before == set()
+    assert {r.id: r.betweenness for r in out.collect()} == {2: 3.0, 3: 1.0, 4: 1.0}
+
+
+# Degenerate inputs for the power-iteration family: an empty edge set,
+# a single self-loop, duplicate edges, and two components (one of them
+# directed, so pagerank's dangling and sourceless fixups both run).
+_DEGENERATE = [
+    [],
+    [(1, 1)],
+    [(1, 2), (1, 2), (2, 1)],
+    [(1, 2), (2, 1), (3, 4)],
+]
+
+
+@pytest.mark.parametrize(
+    "op",
+    ["pagerank", "personalized_pagerank", "hits", "katz_centrality", "eigenvector_centrality"],
+)
+def test_power_iteration_degenerate_inputs(spark, op):
+    from social_link_prediction_spark.graph import centrality as gc
+    from social_link_prediction_spark.graph import hits as gh
+
+    for edges in _DEGENERATE:
+        e = spark.createDataFrame(edges, "src long, dst long")
+        if op == "pagerank":
+            rows = gpr.pagerank(e, iterations=3).collect()
+            if edges:
+                assert sum(r.pagerank for r in rows) == pytest.approx(1.0)
+        elif op == "personalized_pagerank":
+            with pytest.raises(ValueError):
+                gpr.personalized_pagerank(e, [99], iterations=3)
+            rows = gpr.personalized_pagerank(e, [1], iterations=3).collect() if edges else []
+        elif op == "hits":
+            rows = gh.hits(e, iterations=2).collect()
+        elif op == "katz_centrality":
+            rows = gc.katz_centrality(e, rounds=2).collect()
+        else:
+            rows = gc.eigenvector_centrality(e, rounds=2).collect()
+            if edges:
+                assert max(r.eig for r in rows) == pytest.approx(1.0)
+        if not edges:
+            assert rows == []
 
 
 def test_wl_refinement_path_graph(spark):

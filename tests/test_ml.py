@@ -3,6 +3,7 @@ queries — FIXTURES.md invariant 11."""
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from social_link_prediction_spark.ml import features as mf
@@ -90,6 +91,31 @@ def test_train_and_evaluate(spark):
     model, _ = mp.train_link_model(labeled, edf)
     metrics = mp.evaluate_link_model(model, labeled, edf)
     assert metrics["areaUnderROC"] > 0.8  # separable by construction
+
+
+def test_evaluate_link_model_releases_cache_on_error(spark, monkeypatch, cached_rdd_ids):
+    from pyspark.ml.evaluation import BinaryClassificationEvaluator
+
+    edges = [
+        (f"C{c}N{i}", f"C{c}N{j}", "r") for c in range(3) for i in range(4) for j in range(i + 1, 4)
+    ]
+    edf = spark.createDataFrame(edges, ["src", "dst", "rel"])
+    nodes = edf.select(F.col("src").alias("id")).union(edf.select("dst")).distinct()
+    labeled = ls.negative_sample(edf, nodes, ratio=1.0)
+    model, _ = mp.train_link_model(labeled, edf)
+    # a successful run first, so the pair-feature caches it shares with
+    # the failing run below already exist
+    assert set(mp.evaluate_link_model(model, labeled, edf)) == {"areaUnderROC", "areaUnderPR"}
+    before = cached_rdd_ids()
+
+    def failing_evaluate(self, dataset):
+        dataset.count()  # the scored frame is materialized, then the metric fails
+        raise RuntimeError("evaluator failed")
+
+    monkeypatch.setattr(BinaryClassificationEvaluator, "evaluate", failing_evaluate)
+    with pytest.raises(RuntimeError, match="evaluator failed"):
+        mp.evaluate_link_model(model, labeled, edf)
+    assert cached_rdd_ids() - before == set()
 
 
 def test_scan_relationship_filters(spark):

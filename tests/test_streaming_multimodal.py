@@ -1,6 +1,7 @@
 """Structured Streaming pipeline + multimodal column plumbing."""
 
 import json
+import time
 
 from pyspark.sql import functions as F
 
@@ -232,7 +233,16 @@ def test_stateful_user_sessions_stream(spark, tmp_path):
     stream = se.read_event_stream(spark, str(tmp_path))
     sess = se.stateful_user_sessions(stream, gap_seconds=3600)
     q = se.run_to_memory_sink(sess, "sessions", mode="append")
-    q.awaitTermination(120)
+    # The pending processing-time timeouts keep the query running
+    # no-data batches ("cleaning up state") forever, so neither
+    # awaitTermination() nor processAllAvailable() returns. A batch's
+    # progress is reported after its sink commit: stop once the
+    # progress log accounts for all 10 input rows.
+    deadline = time.monotonic() + 120
+    while sum(p["numInputRows"] for p in q.recentProgress) < 10:
+        assert time.monotonic() < deadline, "stream did not process its input"
+        time.sleep(0.2)
+    q.stop()
     out = spark.sql("select * from sessions").collect()
     assert out, "stateful operator emitted nothing"
     # last update per user carries the cumulative totals: 10 events,
