@@ -218,15 +218,18 @@ def run_analyze(name_a: str, name_b: str, warehouse: str) -> dict:
     spark = _get_spark("slp-analyze")
     nodes, edges = _load_graph(spark, warehouse)
     svc = AnalysisService(nodes, edges)
-    res = svc.find_connection(name_a, name_b)
-    steps = res.pop("steps", None)
-    print(json.dumps(res))
-    if steps is not None:
-        for row in steps.collect():
-            print(
-                f"  {row.pos}: {row.node_name or row.node} "
-                f"-[{row.rel}/{row.direction}]-> {row.next_node}"
-            )
+    try:
+        res = svc.find_connection(name_a, name_b)
+        steps = res.pop("steps", None)
+        print(json.dumps(res))
+        if steps is not None:
+            for row in steps.collect():
+                print(
+                    f"  {row.pos}: {row.node_name or row.node} "
+                    f"-[{row.rel}/{row.direction}]-> {row.next_node}"
+                )
+    finally:
+        svc.close()
     return res
 
 

@@ -5,18 +5,23 @@ degrees-of-separation job (G3–G6, G9).
 Reference semantics: core/algorithms/bfs.py:91-147 (igraph Dijkstra,
 undirected traversal, weighted), application/analysis_service.py
 (process-pool fan-out of one-to-many queries, path decoration,
-human-count degrees). Here ONE Bellman-Ford-style frontier loop serves
-every variant: the frontier carries (source, node, dist, path) and all
-sources relax simultaneously — the reference's 100k-pair experiment is
-a single Spark job, executors replacing the process pool.
+human-count degrees). Two shapes serve every variant, both keyed by
+source so all sources relax simultaneously — the reference's 100k-pair
+experiment is a single Spark job, executors replacing the process
+pool:
+- a Bellman-Ford-style frontier loop (``multi_source_shortest_paths``)
+  for deep searches: one driver round per hop;
+- a static unrolled plan (``_bfs_static`` + ``_static_reconstruct``)
+  for hop budgets ≤ 4: the bidirectional BFS halves and weighted pair
+  searches up to 4 hops, one lazily planned DAG with no per-round jobs.
 
 Scale notes:
 - frontier pruning: a (source,node) improvement joins against the best
   known distance, so settled nodes drop out of the frontier.
 - max_hops caps rounds (six-degrees domain: paths ≤ ~8 hops, NB cell
   136/140); each round localCheckpoints to truncate lineage.
-- path reconstruction carries the vertex array in the frontier —
-  bounded by max_hops, so row width stays small.
+- both shapes keep parent pointers, not paths; paths are rebuilt for
+  the requested targets only, bounded by max_hops.
 """
 
 from __future__ import annotations
@@ -43,8 +48,10 @@ def multi_source_shortest_paths(
     requested targets only (``reconstruct_paths``). Unit weights when
     ``weight`` is None (hop-count BFS). Weights must be positive
     (guarantees the parent chain is acyclic: dist strictly decreases
-    along it); infinite weights (blacklisted edges, bfs.py:26) never
-    relax anything: x + inf > any known distance.
+    along it). Infinite weights (blacklisted edges, bfs.py:26) never
+    improve a FINITE distance, but a node first reached only through
+    them is kept with dist = inf (x + inf beats "no distance yet");
+    callers that need a path read a non-finite dist as unreachable.
 
     Per-round merges are min(struct(dist, parent)) hash aggregations —
     partially aggregatable map-side, no row_number sort — with a
@@ -207,67 +214,101 @@ def pair_shortest_paths(
     magnitude — this is what makes the 100k-pair six-degrees experiment
     one tractable job. Weighted pairs use the unidirectional relaxation
     (bidirectional Dijkstra's stopping rule isn't worth the complexity
-    here).
+    here): up to 4 hops as the static unrolled plan, whose search table
+    and |pairs|-row result are each pinned once, so neither the
+    reconstruct steps nor a caller's several actions re-run the search;
+    deeper budgets keep the pruned dynamic loop. Both return the same
+    rows, parent tie-break included.
     """
     if weight is None:
         return _pair_paths_bidirectional(edges, pairs, max_hops)
     sources = pairs.select(F.col("src").alias("source")).dropDuplicates()
-    best = multi_source_shortest_paths(edges, sources, weight, max_hops)
     targets = pairs.select(
         F.col("src").alias("source"), F.col("dst").alias("id")
     ).dropDuplicates()
-    rec = reconstruct_paths(best, targets, max_hops)
-    return (
-        pairs.join(
-            rec.select(
-                F.col("source").alias("src"), F.col("id").alias("dst"), "dist", "path"
-            ),
-            ["src", "dst"],
-            "left",
-        )
+    static = max_hops <= 4
+    if static:
+        # pinned: the reconstruct below reads it max_hops + 2 times
+        best = _bfs_static(undirected(edges), sources, max_hops, weight).localCheckpoint()
+        # max_hops + 1 steps, as reconstruct_paths takes: a parent that
+        # improves in the last level leaves its child's chain one longer
+        rec = _static_reconstruct(best, targets, max_hops + 1)
+    else:
+        best = multi_source_shortest_paths(edges, sources, weight, max_hops)
+        rec = reconstruct_paths(best, targets, max_hops)
+    out = pairs.join(
+        rec.select(
+            F.col("source").alias("src"), F.col("id").alias("dst"), "dist", "path"
+        ),
+        ["src", "dst"],
+        "left",
     )
+    return out.localCheckpoint() if static else out
 
 
 def _bfs_static(
-    edges: DataFrame, sources: DataFrame, hops: int
+    edges: DataFrame, sources: DataFrame, hops: int, weight: str | None = None
 ) -> DataFrame:
-    """Unit-weight multi-source BFS as ONE static lazy plan: ``hops``
-    unrolled expand+dedup levels, unioned and min-merged — no driver
-    loop, no per-round localCheckpoint/count jobs. Returns the same
-    (source, id, dist, parent) table as the dynamic loop (min-parent
-    tie-break identical: level-h candidates for a node's FIRST level
-    are exactly the dynamic round's candidate set).
+    """Multi-source shortest paths (unit weights, or the ``weight``
+    column) as ONE static lazy plan: ``hops`` unrolled expand+merge
+    levels, unioned and min-merged — no driver loop, no per-round
+    localCheckpoint/count jobs. Returns the same (source, id, dist,
+    parent) table as ``multi_source_shortest_paths`` over the same
+    (already oriented) edges, row for row.
+
+    Level h holds, per (source, node), the cheapest walk of exactly h
+    edges as min(struct(dist, parent)). The final merge is
+    min(struct(dist, level, parent)): the best distance, reached first
+    at the smallest level, with that level's smallest parent — exactly
+    the dynamic loop's tie-break, where the first round that reaches a
+    distance wins and later rounds replace it only on a strict
+    improvement. (The parents that reach a node's best distance at its
+    first such level h are exactly the nodes the dynamic loop improved
+    in round h−1, so both pick the same smallest one.) For unit weights
+    level = dist, so the merge is the (dist, parent) one.
 
     Trade-off vs the dynamic loop: no early exit and no
     settled-pruning, so each level re-expands already-seen nodes —
     per-level dedup bounds every level at |sources| × |V| rows, which
     is the right trade only for SMALL hop budgets (the bidirectional
-    halves run ⌈h/2⌉ ≤ 4). The dynamic loop stays the scale path for
-    deep or weighted traversals; this exists because at gate scale a
-    2-round dynamic BFS costs ~8 Spark jobs of pure per-job overhead
-    and this costs one."""
+    halves run ⌈h/2⌉ ≤ 4, weighted pairs ≤ 4). The dynamic loop stays
+    the scale path for deep traversals; this exists because at gate
+    scale a 2-round dynamic BFS costs ~8 Spark jobs of pure per-job
+    overhead and this costs one."""
     id_type = dict(sources.dtypes)["source"]
-    e = edges.select("src", "dst")
+    w = F.col(weight) if weight else F.lit(1.0)
+    e = edges.select("src", "dst", w.alias("w")).filter(~F.col("w").isNull())
     lvl = sources.select(
         "source",
         F.col("source").alias("id"),
+        F.lit(0.0).alias("dist"),
         F.lit(None).cast(id_type).alias("parent"),
     )
-    levels = [lvl.withColumn("dist", F.lit(0.0))]
+    levels = [lvl.withColumn("level", F.lit(0))]
     for h in range(1, hops + 1):
         lvl = (
             lvl.join(e.withColumnRenamed("src", "id"), "id")
             .groupBy("source", F.col("dst").alias("nid"))
-            .agg(F.min("id").alias("parent"))
-            .select("source", F.col("nid").alias("id"), "parent")
+            .agg(
+                F.min(
+                    F.struct(
+                        (F.col("dist") + F.col("w")).alias("dist"),
+                        F.col("id").alias("parent"),
+                    )
+                ).alias("c")
+            )
+            .select(
+                "source", F.col("nid").alias("id"),
+                F.col("c.dist").alias("dist"), F.col("c.parent").alias("parent"),
+            )
         )
-        levels.append(lvl.withColumn("dist", F.lit(float(h))))
+        levels.append(lvl.withColumn("level", F.lit(h)))
     allv = levels[0]
     for d in levels[1:]:
         allv = allv.unionByName(d)
     return (
         allv.select(
-            "source", "id", F.struct("dist", "parent").alias("c")
+            "source", "id", F.struct("dist", "level", "parent").alias("c")
         )
         .groupBy("source", "id")
         .agg(F.min("c").alias("c"))
@@ -507,11 +548,10 @@ def ego_network(
 ) -> DataFrame:
     """G10: k-hop neighborhood — iterative frontier expansion, one join
     per hop. Returns (id, hop) with the minimum hop distance ≤ k."""
-    spark = edges.sparkSession
     e = (edges if directed else undirected(edges)).select("src", "dst")
-    seen = spark.createDataFrame([(s,) for s in seed_ids], ["id"]).withColumn(
-        "hop", F.lit(0)
-    )
+    seen = literal_frame(
+        edges.sparkSession, [(s,) for s in seed_ids], ["id"]
+    ).withColumn("hop", F.lit(0))
     frontier = seen
     for hop in range(1, k + 1):
         nxt = (
@@ -612,7 +652,9 @@ def six_degrees_experiment(
 
     def _sample(s: int, out: str) -> DataFrame:
         cand = ids.filter(F.pmod(hash60(skey, F.lit(s)), F.lit(K)) < thresh)
-        w = Window.orderBy(hash60(skey, F.lit(s + 1_000_003)), "id")
+        # ties break on the hashed public key too, so the window order
+        # is the oracle's replay by construction, not by hash60 luck
+        w = Window.orderBy(hash60(skey, F.lit(s + 1_000_003)), skey)
         return (
             cand.withColumn("k", F.row_number().over(w))
             .filter(F.col("k") <= n_pairs)
@@ -730,7 +772,7 @@ def double_sweep_diameter(
     """
     spark = edges.sparkSession
     start = edges.agg(F.min("src")).first()[0]
-    s1 = spark.createDataFrame([(start,)], ["source"])
+    s1 = literal_frame(spark, [(start,)], ["source"])
     d1 = multi_source_shortest_paths(
         edges, s1, weight=None, max_hops=max_hops, directed=directed
     )
@@ -738,12 +780,36 @@ def double_sweep_diameter(
         d1.orderBy(F.col("dist").desc(), F.col("id").asc()).select("id", "dist").first()
     )
     far, ecc_start = far_row[0], int(far_row[1])
-    s2 = spark.createDataFrame([(far,)], ["source"])
+    s2 = literal_frame(spark, [(far,)], ["source"])
     d2 = multi_source_shortest_paths(
         edges, s2, weight=None, max_hops=max_hops, directed=directed
     )
     diameter_lb = int(d2.agg(F.max("dist")).first()[0])
-    return spark.createDataFrame(
+    return literal_frame(
+        spark,
         [(start, far, ecc_start, diameter_lb)],
-        "start_node long, far_node long, ecc_start long, diameter_lb long",
+        ["start_node", "far_node", "ecc_start", "diameter_lb"],
+        ["bigint"] * 4,
     )
+
+
+# the types spark.createDataFrame infers for Python scalars
+_INFERRED_TYPES = {bool: "boolean", int: "bigint", float: "double", str: "string"}
+
+
+def literal_frame(
+    spark, rows: list[tuple], names: list[str], types: list[str] | None = None
+) -> DataFrame:
+    """``spark.createDataFrame(rows, names)`` as a JVM literal frame: the
+    rows are inlined over a one-partition ``range(1)``, so no Python-RDD
+    scan (and no Python worker task) runs each time a plan reads it.
+    ``types`` defaults to what createDataFrame infers from the first
+    row (a Python int is bigint there, while ``F.lit`` alone gives int)."""
+    types = types or [_INFERRED_TYPES[type(v)] for v in rows[0]]
+    cols = [[F.lit(v).cast(t).alias(n) for v, n, t in zip(r, names, types)] for r in rows]
+    one = spark.range(0, 1, 1, 1)
+    if len(rows) == 1:
+        # a projection, not a generator: the optimizer then folds the
+        # values into downstream filters and joins as constants
+        return one.select(*cols[0])
+    return one.select(F.inline(F.array(*[F.struct(*c) for c in cols])))

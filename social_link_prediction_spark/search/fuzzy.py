@@ -92,7 +92,11 @@ def _base_score(query_norm: str, scorer: str = "auto") -> Column:
         def wratio(names: pd.Series) -> pd.Series:
             return names.map(lambda n: score_fn(query_norm, n or ""))
 
-        return wratio(F.col("norm_name"))
+        # nondeterministic only to the optimizer: it then keeps the
+        # cutoff filter above the score projection instead of pushing a
+        # copy of the UDF into it, so each candidate is scored once
+        # (one ArrowEvalPython node, not two)
+        return wratio.asNondeterministic()(F.col("norm_name"))
     # JVM levenshtein ratio (no Python in the scan)
     q = F.lit(query_norm)
     dist = F.levenshtein(F.col("norm_name"), q)

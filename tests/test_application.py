@@ -33,6 +33,32 @@ def test_find_connection_unreachable(social_graph):
     assert not out["success"]
 
 
+def test_find_connection_infinite_path_is_no_path(social_graph):
+    """Within one hop Alice reaches Eve only over the blacklisted
+    influenced_by edge: an infinite distance is no path, not a success."""
+    v, e = social_graph
+    svc = AnalysisService(v, e)
+    out = svc.find_connection("Alice", "Eve", max_hops=1)
+    assert not out["success"]
+    assert out["message"] == "no path within max_hops"
+    assert (out["src"], out["dst"]) == ("Q1", "Q5")
+
+
+def test_find_connection_close_releases_service_cache(social_graph, cached_rdd_ids):
+    v, e = social_graph
+    # frames no other test serves, so their caches are this service's own
+    v, e = v.filter(F.col("id") != "W1"), e.filter(F.col("dst") != "W1")
+    before = cached_rdd_ids()
+    svc = AnalysisService(v, e)
+    assert svc.find_connection("Alice", "Bob", max_hops=2)["success"]
+    assert len(cached_rdd_ids() - before) == 2  # index + weighted edges
+    svc.close()
+    assert cached_rdd_ids() - before == set()
+    # still usable: the next request persists both again
+    assert svc.find_connection("Alice", "Bob", max_hops=2)["success"]
+    svc.close()
+
+
 def test_compute_degrees_batch(social_graph):
     v, e = social_graph
     svc = AnalysisService(v, e)

@@ -2,6 +2,7 @@
 components, ego — FIXTURES.md invariants 1, 8, 9."""
 
 import math
+import random
 
 import pytest
 from pyspark.sql import functions as F
@@ -74,6 +75,63 @@ def test_decorate_path(social_graph):
     dec = gp.decorate_path(sp, e, v).collect()
     assert [d.rel for d in dec] == ["spouse", "sibling"]
     assert dec[0].node_name == "Alice"
+
+
+def _weighted_graph(spark, seed=5, n=24, m=60):
+    """Seeded undirected multigraph with weights from {1, 2, inf}: equal
+    distances through different parents and infinite-only routes both
+    occur."""
+    rng = random.Random(seed)
+    rows = [
+        (rng.randrange(n), rng.randrange(n), rng.choice([1.0, 2.0, math.inf]))
+        for _ in range(m)
+    ]
+    return spark.createDataFrame(
+        [r for r in rows if r[0] != r[1]], "src bigint, dst bigint, weight double"
+    )
+
+
+@pytest.mark.parametrize("max_hops", [1, 2, 3, 4])
+def test_static_weighted_search_matches_dynamic_loop(spark, max_hops):
+    """The static unrolled search equals the pruned dynamic loop row for
+    row, parent tie-break included, and weighted pair_shortest_paths
+    (which takes the static plan up to 4 hops) equals reconstruct_paths
+    over the dynamic table."""
+    from social_link_prediction_spark.graph.build import undirected
+
+    e = _weighted_graph(spark)
+    sources = spark.createDataFrame([(0,), (3,), (7,)], "source bigint")
+    dyn = gp.multi_source_shortest_paths(e, sources, "weight", max_hops)
+    static = gp._bfs_static(undirected(e), sources, max_hops, "weight")
+    cols = ["source", "id", "dist", "parent"]
+    dyn_rows = sorted(tuple(r) for r in dyn.select(cols).collect())
+    assert sorted(tuple(r) for r in static.select(cols).collect()) == dyn_rows
+    if max_hops >= 2:
+        assert any(math.isinf(r[2]) for r in dyn_rows)
+        # some node has two parents at its best distance: the tie-break
+        # is exercised, not vacuous
+        best = {(r[0], r[1]): r[2] for r in dyn_rows}
+        und = [(r.src, r.dst, r.weight) for r in undirected(e).collect()]
+        assert any(
+            len({u for u, x, w in und if x == v and best.get((s, u), d) + w == d}) > 1
+            for (s, v), d in best.items()
+            if 0 < d < math.inf
+        )
+
+    pairs = spark.createDataFrame(
+        [(0, t) for t in range(24)] + [(7, t) for t in (3, 7, 11)], "src bigint, dst bigint"
+    )
+    targets = pairs.selectExpr("src AS source", "dst AS id")
+    rec = {
+        (r.source, r.id): (r.dist, r.path)
+        for r in gp.reconstruct_paths(dyn, targets, max_hops).collect()
+    }
+    got = {
+        (r.src, r.dst): (r.dist, r.path)
+        for r in gp.pair_shortest_paths(e, pairs, "weight", max_hops).collect()
+    }
+    assert got == {k: rec.get(k, (None, None)) for k in got}
+    assert len(got) == 27
 
 
 def test_pagerank_sums_to_one(social_graph):
@@ -152,6 +210,43 @@ def test_six_degrees_sampling_no_global_topk(social_graph):
     # threshold filter — not xxhash64 (DuckDB can't replay it), and
     # never a rand() sort.
     assert "pmod(" in plan and "md5(" in plan
+
+
+def test_six_degrees_sampler_ties_break_on_sample_key(spark, monkeypatch):
+    """A relabeled int graph sampled through ``sample_key`` draws the same
+    pairs as the graph keyed by those strings, even where the sampler's
+    order hash ties: ties break on the key an oracle replays, not on the
+    int id (ADVICE r10, paths.py:618). Int order 1, 2, 3, 4 and string
+    order n1, n10, n11, n12 pick different sources when every src-order
+    hash ties."""
+    from social_link_prediction_spark.ml import linksplit
+
+    seed, real = 1, linksplit.hash60
+
+    def hash60(col, salt):
+        tie = str(seed + 1_000_003) in str(salt)
+        return F.lit(0).cast("long") if tie else real(col, salt)
+
+    monkeypatch.setattr(linksplit, "hash60", hash60)
+    n = 12
+    ring = [(i, i % n + 1) for i in range(1, n + 1)] + [(1, 7), (3, 10)]
+    e_int = spark.createDataFrame(ring, "src bigint, dst bigint")
+    v_int = spark.createDataFrame([(i, "human") for i in range(1, n + 1)], "id bigint, type string")
+
+    def as_str(df, cols):
+        return df.select(
+            *[F.concat(F.lit("n"), F.col(c).cast("string")).alias(c) for c in cols],
+            *[c for c in df.columns if c not in cols],
+        )
+
+    run = dict(n_pairs=4, seed=seed, max_hops=4, exact=True)
+    relabeled = gp.six_degrees_experiment(
+        e_int, v_int, sample_key=F.concat(F.lit("n"), F.col("id").cast("string")), **run
+    ).first()
+    keyed = gp.six_degrees_experiment(
+        as_str(e_int, ["src", "dst"]), as_str(v_int, ["id"]), **run
+    ).first()
+    assert relabeled == keyed
 
 
 def test_triangles_exact_once(spark):

@@ -337,3 +337,54 @@ def test_mixture_rebalance_broadcasts_report_join(spark):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" not in plan, "mixture report join lost its broadcast"
     assert "BroadcastHashJoin" in plan
+
+
+def test_find_connection_pair_frame_has_no_python_scan(social_graph, monkeypatch):
+    """The request's one-row pair frame is JVM literals: a Python-RDD
+    scan (ExistingRDD) would start Python worker tasks on every action
+    of the request that reads it."""
+    from social_link_prediction_spark.application import AnalysisService
+    from social_link_prediction_spark.graph import paths as gp
+
+    seen = []
+    search = gp.pair_shortest_paths
+
+    def spy(edges, pairs, *args, **kw):
+        seen.append(pairs)
+        return search(edges, pairs, *args, **kw)
+
+    monkeypatch.setattr(gp, "pair_shortest_paths", spy)
+    v, e = social_graph
+    assert AnalysisService(v, e).find_connection("Alice", "Bob", max_hops=2)["success"]
+    (pairs,) = seen
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan
+    assert [tuple(r) for r in pairs.collect()] == [("Q1", "Q2")]
+
+
+def test_fuzzy_lookup_scores_each_candidate_once(social_graph):
+    """The WRatio pandas UDF is planned once: the cutoff filter stays
+    above the score projection instead of carrying a second copy of
+    the UDF below it."""
+    from social_link_prediction_spark.search import fuzzy as fz
+
+    v, _ = social_graph
+    df = fz.fuzzy_lookup(fz.build_search_index(v), "Alise", scorer="auto")
+    assert [r.id for r in df.collect()] == ["Q1"]
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"\bArrowEvalPython\b", plan)) == 1
+
+
+def test_plan_audit_counts_python_nodes_and_rdd_scans(spark):
+    from tools.plan_audit import audit
+
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+
+    def counts(df):
+        a = audit(df._jdf.queryExecution().explainString(mode))
+        return a["python_eval"], a["existing_rdd_scans"]
+
+    rows = spark.createDataFrame([(1, "a")], "id bigint, name string")
+    assert counts(rows) == (0, 1)
+    assert counts(rows.mapInPandas(lambda it: it, rows.schema)) == (1, 1)
+    assert counts(spark.range(3).selectExpr("id * 2 AS x")) == (0, 0)

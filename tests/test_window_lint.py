@@ -288,7 +288,7 @@ LEDGER = {
     'catalog/c06.py|wts = Window.orderBy(F.abs(F.col("cw")).desc(), "s")':
         ('bounded',
          'priority/segment enum frames'),
-    'graph/paths.py|w = Window.orderBy(hash60(skey, F.lit(s + 1_000_003)), "id")':
+    'graph/paths.py|w = Window.orderBy(hash60(skey, F.lit(s + 1_000_003)), skey)':
         ('bounded',
          'hash-prefiltered sample frame (~target rows); skey is the '
          'r10 sample_key hook, same site as before'),

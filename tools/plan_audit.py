@@ -22,6 +22,9 @@ JOIN_OPS = (
     "BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",
     "BroadcastNestedLoopJoin", "CartesianProduct",
 )
+# operators that run Python workers: each is one Python task per input
+# partition every time the plan executes
+PYTHON_OPS = ("ArrowEvalPython", "BatchEvalPython", "MapInPandas")
 
 
 def audit(plan: str) -> dict:
@@ -36,6 +39,12 @@ def audit(plan: str) -> dict:
         counts[op] = counts.get(op, 0) + 1
     out = {op: counts.get(op, 0) for op in JOIN_OPS}
     out["Exchange"] = counts.get("Exchange", 0)
+    out["python_eval"] = sum(counts.get(op, 0) for op in PYTHON_OPS)
+    # a Python-RDD scan (createDataFrame over driver rows) is a "Scan"
+    # node too, so it is matched on its full name
+    out["existing_rdd_scans"] = len(
+        re.findall(r"^\(\d+\) Scan ExistingRDD\b", plan, re.M)
+    )
     out["scans"] = re.findall(r"PushedFilters: (\[[^\]]*\])", plan)
     out["schemas"] = [
         len(s.split(",")) for s in re.findall(r"ReadSchema: struct<([^>]*)>", plan)
@@ -62,12 +71,13 @@ def main() -> None:
         "# PLANS — physical-plan audit of the headline queries",
         "",
         f"Scale dir: `{sf_dir}`. Columns: join operators chosen by",
-        "Catalyst/AQE, shuffle count, parquet scans (pushed filters /",
+        "Catalyst/AQE, shuffle count, Python evaluation nodes and",
+        "Python-RDD (ExistingRDD) scans, parquet scans (pushed filters /",
         "projected column count). Flags: CARTESIAN = unbounded cross",
         "product; NLJ>1 = repeated nested-loop joins.",
         "",
-        "| query | joins | exchanges | scans (pushed / cols) | flags |",
-        "|---|---|---|---|---|",
+        "| query | joins | exchanges | python eval / rdd scans | scans (pushed / cols) | flags |",
+        "|---|---|---|---|---|---|",
     ]
     audited = list(HEADLINE) + sorted(
         n for n in catalog.QUERIES if n.startswith("tpch_") and n not in HEADLINE
@@ -89,7 +99,8 @@ def main() -> None:
             for p, c in zip(a["scans"], a["schemas"])
         )[:120] or "—"
         flags = ", ".join(a["flags"]) or "ok"
-        lines.append(f"| {name} | {joins} | {a['Exchange']} | {scans} | {flags} |")
+        py = f"{a['python_eval']} / {a['existing_rdd_scans']}"
+        lines.append(f"| {name} | {joins} | {a['Exchange']} | {py} | {scans} | {flags} |")
     lines += [
         "",
         "## Notes",
