@@ -12,8 +12,8 @@ pool:
 - a Bellman-Ford-style frontier loop (``multi_source_shortest_paths``)
   for deep searches: one driver round per hop;
 - a static unrolled plan (``_bfs_static`` + ``_static_reconstruct``)
-  for hop budgets ≤ 4: the bidirectional BFS halves and weighted pair
-  searches up to 4 hops, one lazily planned DAG with no per-round jobs.
+  for the bidirectional BFS halves up to 4 hops and for every weighted
+  pair search, one lazily planned DAG with no per-round jobs.
 
 Scale notes:
 - frontier pruning: a (source,node) improvement joins against the best
@@ -214,11 +214,10 @@ def pair_shortest_paths(
     magnitude — this is what makes the 100k-pair six-degrees experiment
     one tractable job. Weighted pairs use the unidirectional relaxation
     (bidirectional Dijkstra's stopping rule isn't worth the complexity
-    here): up to 4 hops as the static unrolled plan, whose search table
-    and |pairs|-row result are each pinned once, so neither the
-    reconstruct steps nor a caller's several actions re-run the search;
-    deeper budgets keep the pruned dynamic loop. Both return the same
-    rows, parent tie-break included.
+    here) as the static unrolled plan, whose search table and
+    |pairs|-row result are each pinned once, so neither the reconstruct
+    steps nor a caller's several actions re-run the search. It returns
+    the rows the dynamic loop would, parent tie-break included.
     """
     if weight is None:
         return _pair_paths_bidirectional(edges, pairs, max_hops)
@@ -226,24 +225,18 @@ def pair_shortest_paths(
     targets = pairs.select(
         F.col("src").alias("source"), F.col("dst").alias("id")
     ).dropDuplicates()
-    static = max_hops <= 4
-    if static:
-        # pinned: the reconstruct below reads it max_hops + 2 times
-        best = _bfs_static(undirected(edges), sources, max_hops, weight).localCheckpoint()
-        # max_hops + 1 steps, as reconstruct_paths takes: a parent that
-        # improves in the last level leaves its child's chain one longer
-        rec = _static_reconstruct(best, targets, max_hops + 1)
-    else:
-        best = multi_source_shortest_paths(edges, sources, weight, max_hops)
-        rec = reconstruct_paths(best, targets, max_hops)
-    out = pairs.join(
+    # pinned: the reconstruct below reads it max_hops + 2 times
+    best = _bfs_static(undirected(edges), sources, max_hops, weight).localCheckpoint()
+    # max_hops + 1 steps, as reconstruct_paths takes: a parent that
+    # improves in the last level leaves its child's chain one longer
+    rec = _static_reconstruct(best, targets, max_hops + 1)
+    return pairs.join(
         rec.select(
             F.col("source").alias("src"), F.col("id").alias("dst"), "dist", "path"
         ),
         ["src", "dst"],
         "left",
-    )
-    return out.localCheckpoint() if static else out
+    ).localCheckpoint()
 
 
 def _bfs_static(
@@ -270,9 +263,10 @@ def _bfs_static(
     Trade-off vs the dynamic loop: no early exit and no
     settled-pruning, so each level re-expands already-seen nodes —
     per-level dedup bounds every level at |sources| × |V| rows, which
-    is the right trade only for SMALL hop budgets (the bidirectional
-    halves run ⌈h/2⌉ ≤ 4, weighted pairs ≤ 4). The dynamic loop stays
-    the scale path for deep traversals; this exists because at gate
+    is the right trade only for small hop budgets or few sources (the
+    bidirectional halves run ⌈h/2⌉ ≤ 4; a weighted pair search has one
+    source per distinct pair source). The dynamic loop stays the scale
+    path for deep many-source traversals; this exists because at gate
     scale a 2-round dynamic BFS costs ~8 Spark jobs of pure per-job
     overhead and this costs one."""
     id_type = dict(sources.dtypes)["source"]
@@ -326,7 +320,8 @@ def _static_reconstruct(
     unrolled left joins against the parent table, no driver loop, no
     per-round localCheckpoint / isEmpty jobs. Semantics match
     ``reconstruct_paths``; use this when the hop budget is small (the
-    bidirectional halves run at ⌈h/2⌉ ≤ 4) — each extra hop is one
+    bidirectional halves run at ⌈h/2⌉ ≤ 4) or the target set is (a
+    weighted pair search's |pairs| rows) — each extra hop is one
     more join in a single lazily-planned DAG, so a 6-hop reconstruct
     is one Spark job instead of ~12 (r6: this was the dominant cost of
     six_degrees_summary, 24.8s → gate-affordable)."""
@@ -789,7 +784,6 @@ def double_sweep_diameter(
         spark,
         [(start, far, ecc_start, diameter_lb)],
         ["start_node", "far_node", "ecc_start", "diameter_lb"],
-        ["bigint"] * 4,
     )
 
 

@@ -91,12 +91,12 @@ def _weighted_graph(spark, seed=5, n=24, m=60):
     )
 
 
-@pytest.mark.parametrize("max_hops", [1, 2, 3, 4])
+@pytest.mark.parametrize("max_hops", [1, 2, 3, 4, 6, 8])
 def test_static_weighted_search_matches_dynamic_loop(spark, max_hops):
     """The static unrolled search equals the pruned dynamic loop row for
     row, parent tie-break included, and weighted pair_shortest_paths
-    (which takes the static plan up to 4 hops) equals reconstruct_paths
-    over the dynamic table."""
+    (which runs the static plan) equals reconstruct_paths over the
+    dynamic table."""
     from social_link_prediction_spark.graph.build import undirected
 
     e = _weighted_graph(spark)
@@ -132,6 +132,9 @@ def test_static_weighted_search_matches_dynamic_loop(spark, max_hops):
     }
     assert got == {k: rec.get(k, (None, None)) for k in got}
     assert len(got) == 27
+    if max_hops > 4:
+        # the deep budgets are exercised: some best path is longer than 4 hops
+        assert any(path and len(path) > 5 for _, path in got.values())
 
 
 def test_pagerank_sums_to_one(social_graph):

@@ -71,13 +71,12 @@ def main() -> None:
         "# PLANS — physical-plan audit of the headline queries",
         "",
         f"Scale dir: `{sf_dir}`. Columns: join operators chosen by",
-        "Catalyst/AQE, shuffle count, Python evaluation nodes and",
-        "Python-RDD (ExistingRDD) scans, parquet scans (pushed filters /",
+        "Catalyst/AQE, shuffle count, parquet scans (pushed filters /",
         "projected column count). Flags: CARTESIAN = unbounded cross",
         "product; NLJ>1 = repeated nested-loop joins.",
         "",
-        "| query | joins | exchanges | python eval / rdd scans | scans (pushed / cols) | flags |",
-        "|---|---|---|---|---|---|",
+        "| query | joins | exchanges | scans (pushed / cols) | flags |",
+        "|---|---|---|---|---|",
     ]
     audited = list(HEADLINE) + sorted(
         n for n in catalog.QUERIES if n.startswith("tpch_") and n not in HEADLINE
@@ -99,8 +98,7 @@ def main() -> None:
             for p, c in zip(a["scans"], a["schemas"])
         )[:120] or "—"
         flags = ", ".join(a["flags"]) or "ok"
-        py = f"{a['python_eval']} / {a['existing_rdd_scans']}"
-        lines.append(f"| {name} | {joins} | {a['Exchange']} | {py} | {scans} | {flags} |")
+        lines.append(f"| {name} | {joins} | {a['Exchange']} | {scans} | {flags} |")
     lines += [
         "",
         "## Notes",
