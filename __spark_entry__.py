@@ -35,7 +35,8 @@ def entry(spark: SparkSession) -> DataFrame:
 # FIRST (its outputs are reworked to exact-integer single-division
 # arithmetic this round — the fix must be driver-proven), then the 49
 # CHEAPEST of the 110 never-driver-proven backlog, ordered by
-# .verify_timings_r10_sf001head.json's measured sf0.01 latency,
+# .verify_timings_r10_sf001head.json's measured sf0.01 latency (that
+# run artifact is no longer tracked; commit cb9c286 still holds it),
 # CHEAPEST FIRST (the 50 sum to ~49s of sf0.01 work): under a count
 # cap any order works, but if the gate is secretly time-capped this
 # order maximizes rows before the cut. Every entry here was green in

@@ -1,5 +1,7 @@
-"""Query catalog: every SURVEY.md §2 operator as a (spark, sf_dir) -> DataFrame
-callable plus a matching DuckDB oracle SQL string.
+"""Catalog part 1/7: the TPC-H flagship, the SURVEY.md §2 relational
+operators, and the first text/dedup, graph and link-prediction families.
+Each query is a (spark, sf_dir) -> DataFrame callable plus a matching
+DuckDB oracle SQL string, registered through ``_base.query``.
 
 Naming discipline: every computed column is aliased identically in the
 Spark code and the oracle SQL — the driver sorts columns by name and
@@ -12,107 +14,18 @@ lineitem events documents embeddings.
 
 from __future__ import annotations
 
-import math
 import os
-from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from social_link_prediction_spark.catalog._base import (
+    ORACLES, _DUCK_H60, _t, _trunc_ntz, query,
+)
 from social_link_prediction_spark.operators import aggregates as agg
 from social_link_prediction_spark.operators import dedup as dd
 from social_link_prediction_spark.operators import joins as jn
-from social_link_prediction_spark.operators import stats as st
 from social_link_prediction_spark.operators import windows as win
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-
-# 60-bit md5 hash as DuckDB SQL — the oracle twin of ml.linksplit.hash60
-# (used by the link split, the negative sampler, and the stratified sampler).
-_DUCK_H60 = (
-    "CAST(concat('0x', substr(md5(concat_ws(chr(31), {args})), 1, 15)) AS BIGINT)"
-)
-
-
-# Session-scoped table-HANDLE cache (r9 perf). A DataFrameReader call
-# costs ~150-250 ms of driver time (py4j + file listing + footer/schema
-# resolution) and the bench's 194 entries issue 291 `_t` calls — ~50 s
-# of pure re-resolution per pass. Caching the LAZY DataFrame handle per
-# (session, dir, table) is table registration (cf. session.register_views),
-# not result caching: no rows are materialized and every action still
-# computes from the parquet inputs. Keyed by applicationId so a new
-# session never receives handles of a stopped one.
-_T_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    app = spark.sparkContext.applicationId
-    key = (app, os.path.abspath(sf_dir), name)
-    df = _T_CACHE.get(key)
-    if df is None:
-        if _T_CACHE and next(iter(_T_CACHE))[0] != app:
-            _T_CACHE.clear()  # previous session's handles are dead
-        df = _t_load(spark, sf_dir, name)
-        _T_CACHE[key] = df
-    return df
-
-
-def _t_load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name == "events":
-        # The events table has been written both as TIMESTAMP(NANOS)
-        # (vectorized reader rejects it by default → read nanos as long)
-        # and as TIMESTAMP(MICROS, isAdjustedToUTC=false) (read natively
-        # as TIMESTAMP_NTZ). Normalize every path to TIMESTAMP_NTZ at
-        # the UTC wall-clock: parquet NTZ is exactly DuckDB's TIMESTAMP,
-        # and an NTZ `ts` makes every downstream bucket label
-        # independent of spark.sql.session.timeZone (VERDICT-r3 #3).
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-        dt = dict(df.dtypes).get("ts")
-        ntz_epoch = "TIMESTAMP_NTZ '1970-01-01 00:00:00'"
-        if dt == "bigint":  # TIMESTAMP(NANOS) read raw: nanos div 1000
-            df = df.withColumn(
-                "ts", F.expr(f"timestampadd(MICROSECOND, ts div 1000, {ntz_epoch})")
-            )
-        elif dt == "timestamp":  # harness read it as LTZ: pin the UTC wall-clock
-            df = df.withColumn(
-                "ts", F.expr(f"timestampadd(MICROSECOND, unix_micros(ts), {ntz_epoch})")
-            )
-        return df
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def _trunc_ntz(unit: str, col: str | Column) -> Column:
-    """Session-TZ-independent truncation for TIMESTAMP_NTZ columns.
-
-    ``F.date_trunc`` always returns session-zone TIMESTAMP (it
-    implicitly casts NTZ input), so its bucket labels shift with
-    ``spark.sql.session.timeZone``. Rebuilding the truncated wall-clock
-    from extracted fields stays NTZ end-to-end — matching DuckDB's
-    ``date_trunc`` over its (NTZ) TIMESTAMP exactly."""
-    c = F.col(col) if isinstance(col, str) else col
-    y, mo, d = F.year(c), F.month(c), F.dayofmonth(c)
-    zero = F.lit(0)
-    if unit == "hour":
-        return F.make_timestamp_ntz(y, mo, d, F.hour(c), zero, zero)
-    if unit == "day":
-        return F.make_timestamp_ntz(y, mo, d, zero, zero, zero)
-    if unit == "month":
-        return F.make_timestamp_ntz(y, mo, F.lit(1), zero, zero, zero)
-    raise ValueError(f"unsupported truncation unit: {unit}")
-
-
-def query(name: str, oracle: str | None = None):
-    """Register a catalog entry (and its oracle, when SQL-expressible)."""
-
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 # =====================================================================
@@ -1122,7 +1035,6 @@ ORACLES["srp_bucket_counts"] = _duck_srp_sql()
 # =====================================================================
 from social_link_prediction_spark.graph import pagerank as gpr  # noqa: E402
 from social_link_prediction_spark.graph import paths as gpaths  # noqa: E402
-from social_link_prediction_spark.graph import testgraph as tg  # noqa: E402
 
 _DUCK_PS_EDGES = """
     e AS (
@@ -2197,25 +2109,25 @@ _IVF_DIM, _IVF_K = 64, 4
 _IVF_CENTROIDS = [
     [1.0 if j % _IVF_K == i else 0.0 for j in range(_IVF_DIM)] for i in range(_IVF_K)
 ]
+# DuckDB twin of sim.ivf_assign over _IVF_CENTROIDS: one cosine score
+# column s{i} per centroid over the vector column ``v``, and the
+# sequential strict-> argmax over them (first best wins).
+_DUCK_IVF_SCORES = ", ".join(
+    f"list_cosine_similarity(v, [{','.join(repr(x) for x in c)}]::DOUBLE[]) AS s{i}"
+    for i, c in enumerate(_IVF_CENTROIDS)
+)
+_DUCK_IVF_CELL = (
+    "CASE WHEN s3 > greatest(s0, s1, s2) THEN 3 "
+    "WHEN s2 > greatest(s0, s1) THEN 2 "
+    "WHEN s1 > s0 THEN 1 ELSE 0 END"
+)
 
 
 def _duck_ivf_sql() -> str:
-    cents = [
-        "[" + ",".join(repr(x) for x in c) + "]::DOUBLE[]" for c in _IVF_CENTROIDS
-    ]
-    scores = ", ".join(
-        f"list_cosine_similarity(v, {c}) AS s{i}" for i, c in enumerate(cents)
-    )
-    # sequential strict-> argmax, first-best-wins (matches ivf_assign)
-    case = (
-        "CASE WHEN s3 > greatest(s0, s1, s2) THEN 3 "
-        "WHEN s2 > greatest(s0, s1) THEN 2 "
-        "WHEN s1 > s0 THEN 1 ELSE 0 END"
-    )
     return f"""
     WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    s AS (SELECT vec_id, {scores} FROM e)
-    SELECT {case} AS ivf_cell, count(*) AS n_vectors
+    s AS (SELECT vec_id, {_DUCK_IVF_SCORES} FROM e)
+    SELECT {_DUCK_IVF_CELL} AS ivf_cell, count(*) AS n_vectors
     FROM s GROUP BY 1 ORDER BY 1
     """
 
@@ -3292,21 +3204,10 @@ _SEMDEDUP_THRESHOLD = 0.4
 def _duck_cells_cte() -> str:
     """(vec_id, v, cell) CTE mirroring semdedup.ivf_cells over
     _IVF_CENTROIDS — the same first-best-wins argmax as ivf_assign."""
-    cents = [
-        "[" + ",".join(repr(x) for x in c) + "]::DOUBLE[]" for c in _IVF_CENTROIDS
-    ]
-    scores = ", ".join(
-        f"list_cosine_similarity(v, {c}) AS s{i}" for i, c in enumerate(cents)
-    )
-    case = (
-        "CASE WHEN s3 > greatest(s0, s1, s2) THEN 3 "
-        "WHEN s2 > greatest(s0, s1) THEN 2 "
-        "WHEN s1 > s0 THEN 1 ELSE 0 END"
-    )
     return f"""
     e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    s AS (SELECT vec_id, v, {scores} FROM e),
-    cells AS (SELECT vec_id, v, {case} AS cell FROM s)"""
+    s AS (SELECT vec_id, v, {_DUCK_IVF_SCORES} FROM e),
+    cells AS (SELECT vec_id, v, {_DUCK_IVF_CELL} AS cell FROM s)"""
 
 
 @query("semantic_dedup_pairs", None)
@@ -3625,6 +3526,7 @@ def _scd2_demo_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query("scd2_merge_customers", _SCD2_ORACLE)
 def scd2_merge_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD type-2 merge audit: apply a deterministic update batch to a
     freshly-initialized customer dimension, then roll up the merged
@@ -3642,10 +3544,6 @@ def scd2_merge_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("is_current", "closed")
     )
-
-
-QUERIES["scd2_merge_customers"] = scd2_merge_customers
-ORACLES["scd2_merge_customers"] = _SCD2_ORACLE
 
 
 _PQ_M, _PQ_SUBDIM, _PQ_K = 4, 16, 4
@@ -4220,10 +4118,11 @@ from social_link_prediction_spark.graph import communities as gcom  # noqa: E402
 _LPA_ROUNDS = 3
 
 
-def _duck_lpa_sql(rounds: int = _LPA_ROUNDS) -> str:
-    """Synchronous LPA unrolled: per round, per-node neighbor-label
-    counts -> argmax (count desc, label asc). MATERIALIZED per round
-    (the labels CTE is referenced by the next round's join)."""
+def _duck_lpa_ctes(rounds: int) -> list[str]:
+    """Synchronous LPA unrolled as CTEs: per round, per-node
+    neighbor-label counts -> argmax (count desc, label asc).
+    MATERIALIZED per round (the labels CTE is referenced by the next
+    round's join); round ``rounds``'s labels are ``l{rounds}``."""
     ctes = [
         """e AS MATERIALIZED (
         SELECT u, v FROM (
@@ -4247,8 +4146,13 @@ def _duck_lpa_sql(rounds: int = _LPA_ROUNDS) -> str:
                     FROM c{i}
                 ) WHERE rn = 1)"""
         )
+    return ctes
+
+
+def _duck_lpa_sql(rounds: int = _LPA_ROUNDS) -> str:
+    """Top-20 LPA communities by size over ``_duck_lpa_ctes``."""
     return (
-        "WITH " + ",\n".join(ctes) + f"""
+        "WITH " + ",\n".join(_duck_lpa_ctes(rounds)) + f"""
     SELECT CASE WHEN label < 0 THEN 'p:' || CAST(-label - 1 AS VARCHAR)
                 ELSE 's:' || CAST(label AS VARCHAR) END AS community,
            count(*) AS n_members

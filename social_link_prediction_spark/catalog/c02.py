@@ -1,20 +1,35 @@
-"""Catalog part 2/6: TPC-H tail + time series + text/dedup + stats families (tpch q20-q22,
+"""Catalog part 2/7: TPC-H tail + time series + text/dedup + stats families (tpch q20-q22,
 sessionization, sketches, calibration, ANN serving, community/graph ops).
 
-Continuation of the single registration script split at top-level
-statement boundaries; see catalog/__init__.py for the chain design.
+Imports the shared core from ``_base`` and the helpers it reuses from
+earlier family modules; see catalog/__init__.py.
 """
-from __future__ import annotations  # noqa: F401
+from __future__ import annotations
 
-from social_link_prediction_spark.catalog import c01 as _prev
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
 
-# continue the registration script: adopt the full accumulated
-# namespace (incl. _-prefixed helpers and the shared registries)
-globals().update(
-    {k: v for k, v in vars(_prev).items() if not k.startswith("__")}
+from social_link_prediction_spark.catalog._base import (
+    ORACLES, _DUCK_H60, _t, _trunc_ntz, query,
 )
-del _prev
-
+from social_link_prediction_spark.catalog.c01 import (
+    _DUCK_IVF_CELL, _DUCK_IVF_SCORES, _DUCK_PSX, _DUCK_PS_EDGES_INT, _DUCK_SHINGLE1,
+    _DUCK_TOKS, _DUCK_TRI_EDGES, _DUCK_WALK_SEEDS, _IVF_CENTROIDS, _IVF_K, _LPA_ROUNDS,
+    _MINHASH_N, _PQ_CODEBOOKS, _PQ_QUERY_VEC, _duck_lpa_ctes, _fmt_node,
+    _partsupp_edges_int, _pq_adc_terms_sql, _pq_dist_case_sql, _pq_luts, _psx,
+    _tri_edges,
+)
+from social_link_prediction_spark.graph import communities as gcom
+from social_link_prediction_spark.graph import testgraph as tg
+from social_link_prediction_spark.graph import walks as gwalks
+from social_link_prediction_spark.ml import linksplit as mls
+from social_link_prediction_spark.operators import aggregates as agg
+from social_link_prediction_spark.operators import stats as st
+from social_link_prediction_spark.operators import windows as win
+from social_link_prediction_spark.pipelines import dedup as pdd
+from social_link_prediction_spark.pipelines import similarity as sim
+from social_link_prediction_spark.pipelines import text as ptx
+from social_link_prediction_spark.pipelines import training_prep as tp
 
 
 @query(
@@ -631,17 +646,6 @@ def _ivf_probe_cells(query_vec: list[float], n_probe: int = 2) -> list[int]:
 
 
 def _duck_ivf_pq_sql(n_probe: int = 2, shortlist: int = 50, k: int = 10) -> str:
-    cents = [
-        "[" + ",".join(repr(x) for x in c) + "]::DOUBLE[]" for c in _IVF_CENTROIDS
-    ]
-    scores = ", ".join(
-        f"list_cosine_similarity(v, {c}) AS s{i}" for i, c in enumerate(cents)
-    )
-    case = (
-        "CASE WHEN s3 > greatest(s0, s1, s2) THEN 3 "
-        "WHEN s2 > greatest(s0, s1) THEN 2 "
-        "WHEN s1 > s0 THEN 1 ELSE 0 END"
-    )
     probes = ", ".join(str(p) for p in _ivf_probe_cells(_PQ_QUERY_VEC, n_probe))
     # per-subspace encode over the candidate set — the SAME shared
     # fragments as _duck_pq_sql, restricted to the probed cells
@@ -650,8 +654,8 @@ def _duck_ivf_pq_sql(n_probe: int = 2, shortlist: int = 50, k: int = 10) -> str:
     qv = "[" + ",".join(repr(float(x)) for x in _PQ_QUERY_VEC) + "]::DOUBLE[]"
     return f"""
     WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    s AS (SELECT vec_id, v, {scores} FROM e),
-    cand AS (SELECT vec_id, v FROM s WHERE ({case}) IN ({probes})),
+    s AS (SELECT vec_id, v, {_DUCK_IVF_SCORES} FROM e),
+    cand AS (SELECT vec_id, v FROM s WHERE ({_DUCK_IVF_CELL}) IN ({probes})),
     d AS (SELECT vec_id, v,
            {dcols}
           FROM cand),
@@ -1609,31 +1613,9 @@ def bigram_logprob_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _duck_modularity_sql(rounds: int = _LPA_ROUNDS) -> str:
-    """LPA label evolution (same unrolled CTEs as _duck_lpa_sql) +
-    Newman modularity accounting over the final labels."""
-    ctes = [
-        """e AS MATERIALIZED (
-        SELECT u, v FROM (
-            SELECT DISTINCT -l_partkey - 1 AS u, l_suppkey::BIGINT AS v FROM lineitem
-            UNION SELECT DISTINCT l_suppkey::BIGINT, -l_partkey - 1 FROM lineitem
-        ) WHERE u <> v)""",
-        "l0 AS MATERIALIZED (SELECT DISTINCT u AS id, u AS label FROM e)",
-    ]
-    for i in range(1, rounds + 1):
-        p = i - 1
-        ctes.append(
-            f"""c{i} AS MATERIALIZED (
-                SELECT e.u AS id, l.label, count(*) AS c
-                FROM e JOIN l{p} l ON l.id = e.v
-                GROUP BY e.u, l.label),
-            l{i} AS MATERIALIZED (
-                SELECT id, label FROM (
-                    SELECT id, label,
-                           row_number() OVER (PARTITION BY id
-                                              ORDER BY c DESC, label ASC) AS rn
-                    FROM c{i}
-                ) WHERE rn = 1)"""
-        )
+    """LPA label evolution (``_duck_lpa_ctes``) + Newman modularity
+    accounting over the final labels."""
+    ctes = _duck_lpa_ctes(rounds)
     L = f"l{rounds}"
     ctes.append(f"""mm AS (SELECT CAST(count(*) AS DOUBLE) / 2 AS m FROM e),
     dc AS (SELECT l.label, CAST(count(*) AS BIGINT) AS degree_sum
@@ -1976,6 +1958,33 @@ _BM25_TERMS = ["spark", "join", "fast"]
 _BM25_K1, _BM25_B = 1.2, 0.75
 
 
+def _bm25_scores(docs: DataFrame, out: str) -> DataFrame:
+    """BM25 score (6 dp) of every document matching a ``_BM25_TERMS``
+    term, as column ``out`` next to ``doc_id``."""
+    tok = docs.select("doc_id", F.explode(ptx.tokens("text")).alias("t"))
+    dl = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
+    avgdl = dl.agg(F.avg("dl").alias("avgdl"))
+    n = docs.agg(F.count(F.lit(1)).alias("n"))
+    tf = (
+        tok.filter(F.col("t").isin(_BM25_TERMS))
+        .groupBy("doc_id", "t")
+        .agg(F.count(F.lit(1)).alias("tf"))
+    )
+    df_ = tf.groupBy("t").agg(F.count(F.lit(1)).alias("df"))
+    idf = F.log((F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1)
+    denom = F.col("tf") + _BM25_K1 * (
+        1 - _BM25_B + _BM25_B * F.col("dl") / F.col("avgdl")
+    )
+    return (
+        tf.join(F.broadcast(df_), "t")
+        .join(dl, "doc_id")
+        .crossJoin(F.broadcast(avgdl))
+        .crossJoin(F.broadcast(n))
+        .groupBy("doc_id")
+        .agg(F.round(F.sum(idf * F.col("tf") * (_BM25_K1 + 1) / denom), 6).alias(out))
+    )
+
+
 @query(
     "bm25_search_docs",
     f"""
@@ -2012,28 +2021,8 @@ def bm25_search_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tf table is |terms|×|matching docs|, never the full inverted
     index); df/avgdl/N are 1-row or vocabulary-sized broadcast
     anchors; ranking is a TakeOrdered heap on the rounded score."""
-    docs = _t(spark, sf_dir, "documents")
-    tok = docs.select("doc_id", F.explode(ptx.tokens("text")).alias("t"))
-    dl = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
-    avgdl = dl.agg(F.avg("dl").alias("avgdl"))
-    n = docs.agg(F.count(F.lit(1)).alias("n"))
-    tf = (
-        tok.filter(F.col("t").isin(_BM25_TERMS))
-        .groupBy("doc_id", "t")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    df_ = tf.groupBy("t").agg(F.count(F.lit(1)).alias("df"))
-    idf = F.log((F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1)
-    denom = F.col("tf") + _BM25_K1 * (
-        1 - _BM25_B + _BM25_B * F.col("dl") / F.col("avgdl")
-    )
     return (
-        tf.join(F.broadcast(df_), "t")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(avgdl))
-        .crossJoin(F.broadcast(n))
-        .groupBy("doc_id")
-        .agg(F.round(F.sum(idf * F.col("tf") * (_BM25_K1 + 1) / denom), 6).alias("bm25"))
+        _bm25_scores(_t(spark, sf_dir, "documents"), "bm25")
         .orderBy(F.col("bm25").desc(), "doc_id")
         .limit(10)
     )
@@ -3450,23 +3439,12 @@ def markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _duck_silhouette_sql() -> str:
-    cents = [
-        "[" + ",".join(repr(x) for x in c) + "]::DOUBLE[]" for c in _IVF_CENTROIDS
-    ]
-    scores = ", ".join(
-        f"list_cosine_similarity(v, {c}) AS s{i}" for i, c in enumerate(cents)
-    )
-    ss = ", ".join(f"s{i}" for i in range(len(cents)))
-    case = (
-        "CASE WHEN s3 > greatest(s0, s1, s2) THEN 3 "
-        "WHEN s2 > greatest(s0, s1) THEN 2 "
-        "WHEN s1 > s0 THEN 1 ELSE 0 END"
-    )
+    ss = ", ".join(f"s{i}" for i in range(_IVF_K))
     return f"""
     WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    s AS (SELECT vec_id, {scores} FROM e),
+    s AS (SELECT vec_id, {_DUCK_IVF_SCORES} FROM e),
     m AS (
-        SELECT {case} AS ivf_cell,
+        SELECT {_DUCK_IVF_CELL} AS ivf_cell,
                list_sort([{ss}], 'DESC')[1] AS s_own,
                list_sort([{ss}], 'DESC')[2] AS s_next
         FROM s
@@ -5082,6 +5060,90 @@ def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("vec_id")
 
 
+def _conversion_durations(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Signup -> first subsequent purchase, one row per signed-up user:
+    ``event`` is 1 when a purchase follows, else 0 (right-censored at
+    the corpus observation end), and ``dur`` is the whole days from
+    signup to that purchase or to the end. The per-user rollup is the
+    only pass over the events."""
+    ev = _t(spark, sf_dir, "events")
+    ends = ev.agg(F.max("ts").alias("obs_end"))
+    u = (
+        ev.groupBy("user_id")
+        .agg(F.min(F.when(F.col("event_type") == "signup", F.col("ts"))).alias("s"))
+        .filter(F.col("s").isNotNull())
+    )
+    p = (
+        u.join(ev, "user_id")
+        .filter((F.col("event_type") == "purchase") & (F.col("ts") >= F.col("s")))
+        .groupBy("user_id", "s")
+        .agg(F.min("ts").alias("p"))
+    )
+    return (
+        u.join(p.select("user_id", "p"), "user_id", "left")
+        .crossJoin(F.broadcast(ends))
+        .select(
+            "user_id",
+            F.when(F.col("p").isNotNull(), 1).otherwise(0).alias("event"),
+            F.floor(
+                (
+                    win.epoch_us(F.coalesce(F.col("p"), F.col("obs_end")))
+                    - win.epoch_us(F.col("s"))
+                )
+                / 86_400_000_000
+            ).alias("dur"),
+        )
+    )
+
+
+def _km_survival(d: DataFrame) -> DataFrame:
+    """Kaplan-Meier product-limit chain over an (event, dur) frame: one
+    row per death time with its at-risk count ``n_risk``, its event
+    count ``d_n`` and the survival ``surv`` just after it."""
+    tot = d.agg(F.count(F.lit(1)).alias("total"))
+    g = d.groupBy("dur").agg(
+        F.count(F.lit(1)).alias("all_n"), F.sum("event").alias("d_n")
+    )
+    wprev = Window.orderBy("dur").rowsBetween(Window.unboundedPreceding, -1)
+    r = (
+        g.crossJoin(F.broadcast(tot))
+        .withColumn(
+            "n_risk",
+            F.col("total") - F.coalesce(F.sum("all_n").over(wprev), F.lit(0)),
+        )
+    )
+    wcum = Window.orderBy("dur").rowsBetween(Window.unboundedPreceding, 0)
+    # a death time where d == n_at_risk drives S(t) to exactly 0; ln(0)
+    # is an error (DuckDB) / NULL (Spark), so the zero is carried as an
+    # explicit cumulative flag and only positive terms enter the
+    # log-sum (the exp-of-summed-logs cumulative product).
+    return (
+        r.filter(F.col("d_n") > 0)
+        .withColumn(
+            "surv",
+            F.when(
+                F.max(
+                    (F.col("d_n") >= F.col("n_risk")).cast("int")
+                ).over(wcum)
+                == 1,
+                F.lit(0.0),
+            ).otherwise(
+                F.exp(
+                    F.sum(
+                        F.when(
+                            F.col("d_n") < F.col("n_risk"),
+                            F.log(
+                                F.lit(1)
+                                - F.col("d_n").cast("double") / F.col("n_risk")
+                            ),
+                        )
+                    ).over(wcum)
+                )
+            ),
+        )
+    )
+
+
 @query(
     "kaplan_meier_conversion",
     """
@@ -5137,77 +5199,7 @@ def kaplan_meier_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     denominators but never the numerators — the survival-analysis
     shape (churn, time-to-convert, hardware lifetime) that naive
     conversion rates get wrong by ignoring censoring."""
-    from social_link_prediction_spark.operators.windows import epoch_us
-
-    ev = _t(spark, sf_dir, "events")
-    ends = ev.agg(F.max("ts").alias("obs_end"))
-    u = (
-        ev.groupBy("user_id")
-        .agg(F.min(F.when(F.col("event_type") == "signup", F.col("ts"))).alias("s"))
-        .filter(F.col("s").isNotNull())
-    )
-    p = (
-        u.join(ev, "user_id")
-        .filter((F.col("event_type") == "purchase") & (F.col("ts") >= F.col("s")))
-        .groupBy("user_id", "s")
-        .agg(F.min("ts").alias("p"))
-    )
-    d = (
-        u.join(p.select("user_id", "p"), "user_id", "left")
-        .crossJoin(F.broadcast(ends))
-        .select(
-            F.when(F.col("p").isNotNull(), 1).otherwise(0).alias("event"),
-            F.floor(
-                (
-                    epoch_us(F.coalesce(F.col("p"), F.col("obs_end")))
-                    - epoch_us(F.col("s"))
-                )
-                / 86_400_000_000
-            ).alias("dur"),
-        )
-    )
-    tot = d.agg(F.count(F.lit(1)).alias("total"))
-    g = d.groupBy("dur").agg(
-        F.count(F.lit(1)).alias("all_n"), F.sum("event").alias("d_n")
-    )
-    wprev = Window.orderBy("dur").rowsBetween(Window.unboundedPreceding, -1)
-    r = (
-        g.crossJoin(F.broadcast(tot))
-        .withColumn(
-            "n_risk",
-            F.col("total") - F.coalesce(F.sum("all_n").over(wprev), F.lit(0)),
-        )
-    )
-    wcum = Window.orderBy("dur").rowsBetween(Window.unboundedPreceding, 0)
-    # a death time where d == n_at_risk drives S(t) to exactly 0; ln(0)
-    # is an error (DuckDB) / NULL (Spark), so the zero is carried as an
-    # explicit cumulative flag and only positive terms enter the
-    # log-sum (the exp-of-summed-logs cumulative product).
-    km = (
-        r.filter(F.col("d_n") > 0)
-        .withColumn(
-            "surv",
-            F.when(
-                F.max(
-                    (F.col("d_n") >= F.col("n_risk")).cast("int")
-                ).over(wcum)
-                == 1,
-                F.lit(0.0),
-            ).otherwise(
-                F.exp(
-                    F.sum(
-                        F.when(
-                            F.col("d_n") < F.col("n_risk"),
-                            F.log(
-                                F.lit(1)
-                                - F.col("d_n").cast("double") / F.col("n_risk")
-                            ),
-                        )
-                    ).over(wcum)
-                )
-            ),
-        )
-    )
+    km = _km_survival(_conversion_durations(spark, sf_dir))
     return km.select(
         F.col("dur").cast("long").alias("dur_days"),
         F.col("n_risk").cast("long").alias("n_risk"),
@@ -5942,25 +5934,14 @@ def reciprocity_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _duck_ann_recall_sql() -> str:
-    cents = [
-        "[" + ",".join(repr(x) for x in c) + "]::DOUBLE[]" for c in _IVF_CENTROIDS
-    ]
-    scores = ", ".join(
-        f"list_cosine_similarity(v, {c}) AS s{i}" for i, c in enumerate(cents)
-    )
-    case = (
-        "CASE WHEN s3 > greatest(s0, s1, s2) THEN 3 "
-        "WHEN s2 > greatest(s0, s1) THEN 2 "
-        "WHEN s1 > s0 THEN 1 ELSE 0 END"
-    )
     q = "[" + ",".join(repr(float(x)) for x in _PQ_QUERY_VEC) + "]::DOUBLE[]"
     probes = ", ".join(str(p) for p in _ivf_probe_cells(_PQ_QUERY_VEC, 2))
     return f"""
     WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
     gt AS (SELECT vec_id FROM e
            ORDER BY list_cosine_similarity(v, {q}) DESC, vec_id LIMIT 10),
-    s AS (SELECT vec_id, v, {scores} FROM e),
-    cand AS (SELECT vec_id, v FROM (SELECT vec_id, v, {case} AS cell FROM s)
+    s AS (SELECT vec_id, v, {_DUCK_IVF_SCORES} FROM e),
+    cand AS (SELECT vec_id, v FROM (SELECT vec_id, v, {_DUCK_IVF_CELL} AS cell FROM s)
              WHERE cell IN ({probes})),
     ivf AS (SELECT vec_id FROM cand
             ORDER BY list_cosine_similarity(v, {q}) DESC, vec_id LIMIT 10)
@@ -6482,6 +6463,32 @@ def int8_quant_error_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # z-order layout audit (promotes warehouse.zorder_key into the gated
 # catalog), grid-density clustering (DBSCAN via dense-cell CC).
 # =====================================================================
+def _daily_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sample autocorrelation (6 dp) of the daily event-count series at
+    lags 1..7: one (lag, acf) row per lag, unordered."""
+    ev = _t(spark, sf_dir, "events")
+    x = ev.groupBy(F.to_date("ts").alias("day")).agg(F.count(F.lit(1)).alias("n"))
+    ix = x.select(
+        "n", F.row_number().over(Window.orderBy("day")).cast("long").alias("t")
+    )
+    mu = ix.agg(F.avg("n").alias("mu"))
+    d = ix.crossJoin(F.broadcast(mu)).select(
+        "t", (F.col("n") - F.col("mu")).alias("c")
+    )
+    den = d.agg(F.sum(F.col("c") * F.col("c")).alias("den"))
+    lags = spark.range(1, 8).select(F.col("id").alias("lag"))
+    a = d.select(F.col("t").alias("at"), F.col("c").alias("ac"))
+    b = d.select(F.col("t").alias("bt"), F.col("c").alias("bc"))
+    return (
+        a.crossJoin(F.broadcast(lags))
+        .join(F.broadcast(b), F.col("bt") == F.col("at") - F.col("lag"))
+        .groupBy("lag")
+        .agg(F.sum(F.col("ac") * F.col("bc")).alias("num"))
+        .crossJoin(F.broadcast(den))
+        .select("lag", F.round(F.col("num") / F.col("den"), 6).alias("acf"))
+    )
+
+
 @query(
     "acf_daily_events",
     """
@@ -6511,30 +6518,7 @@ def acf_daily_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     the days-sized series (lag self-join on the row index), so the
     shape is identical at 100 TB — the series length is bounded by the
     calendar, not the data."""
-    ev = _t(spark, sf_dir, "events")
-    x = ev.groupBy(F.to_date("ts").alias("day")).agg(F.count(F.lit(1)).alias("n"))
-    ix = x.select(
-        "n", F.row_number().over(Window.orderBy("day")).cast("long").alias("t")
-    )
-    mu = ix.agg(F.avg("n").alias("mu"))
-    d = ix.crossJoin(F.broadcast(mu)).select(
-        "t", (F.col("n") - F.col("mu")).alias("c")
-    )
-    den = d.agg(F.sum(F.col("c") * F.col("c")).alias("den"))
-    lags = spark.range(1, 8).select(F.col("id").alias("lag"))
-    a = d.select(F.col("t").alias("at"), F.col("c").alias("ac"))
-    b = d.select(F.col("t").alias("bt"), F.col("c").alias("bc"))
-    r = (
-        a.crossJoin(F.broadcast(lags))
-        .join(F.broadcast(b), F.col("bt") == F.col("at") - F.col("lag"))
-        .groupBy("lag")
-        .agg(F.sum(F.col("ac") * F.col("bc")).alias("num"))
-    )
-    return (
-        r.crossJoin(F.broadcast(den))
-        .select("lag", F.round(F.col("num") / F.col("den"), 6).alias("acf"))
-        .orderBy("lag")
-    )
+    return _daily_acf(spark, sf_dir).orderBy("lag")
 
 
 @query(

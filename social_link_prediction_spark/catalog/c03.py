@@ -1,20 +1,23 @@
-"""Catalog part 3/6: statistics + forecasting + graph analytics (STL, trend tests, RFM,
+"""Catalog part 3/7: statistics + forecasting + graph analytics (STL, trend tests, RFM,
 attribution, bucketed rank stats, HyperBall ANF, ranking metrics).
 
-Continuation of the single registration script split at top-level
-statement boundaries; see catalog/__init__.py for the chain design.
+Imports the shared core from ``_base`` and the helpers it reuses from
+earlier family modules; see catalog/__init__.py.
 """
-from __future__ import annotations  # noqa: F401
+from __future__ import annotations
 
-from social_link_prediction_spark.catalog import c02 as _prev
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
 
-# continue the registration script: adopt the full accumulated
-# namespace (incl. _-prefixed helpers and the shared registries)
-globals().update(
-    {k: v for k, v in vars(_prev).items() if not k.startswith("__")}
-)
-del _prev
-
+from social_link_prediction_spark.catalog._base import ORACLES, _DUCK_H60, _t, query
+from social_link_prediction_spark.catalog.c01 import _duck_langid_sql
+from social_link_prediction_spark.graph import testgraph as tg
+from social_link_prediction_spark.ml import linksplit as mls
+from social_link_prediction_spark.operators import stats as st
+from social_link_prediction_spark.operators import windows as win
+from social_link_prediction_spark.pipelines import dedup as pdd
+from social_link_prediction_spark.pipelines import similarity as sim
+from social_link_prediction_spark.pipelines import text as ptx
 
 
 @query(
@@ -1597,96 +1600,9 @@ def frequent_event_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # =====================================================================
-# Round-5 continuation: CMH stratified test, overdispersion screen,
-# Hurst exponent (R/S), entropy rate of the event chain.
+# Round-5 continuation: overdispersion screen, Hurst exponent (R/S),
+# entropy rate of the event chain.
 # =====================================================================
-@query(
-    "cmh_test_priority_status",
-    """
-    WITH cells AS MATERIALIZED (
-        SELECT c.c_nationkey AS stratum,
-               CAST(sum(CASE WHEN o.o_orderpriority = '1-URGENT'
-                              AND o.o_orderstatus = 'F'
-                             THEN 1 ELSE 0 END) AS BIGINT) AS n11,
-               CAST(sum(CASE WHEN o.o_orderpriority = '1-URGENT'
-                             THEN 1 ELSE 0 END) AS BIGINT) AS r1,
-               CAST(sum(CASE WHEN o.o_orderstatus = 'F'
-                             THEN 1 ELSE 0 END) AS BIGINT) AS c1,
-               CAST(count(*) AS BIGINT) AS n
-        FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-        GROUP BY 1),
-    k AS (SELECT CAST(count(*) AS BIGINT) AS k_strata FROM cells
-          WHERE n > 1),
-    s AS (SELECT sum(n11) AS obs,
-                 sum(r1 * c1 * 1.0 / n) AS exp,
-                 sum(r1 * (n - r1) * c1 * (n - c1) * 1.0
-                     / (n * n * (n - 1.0))) AS var
-          FROM cells WHERE n > 1)
-    SELECT (SELECT k_strata FROM k) AS k_strata,
-           CAST(obs AS BIGINT) AS sum_obs,
-           round(exp, 6) AS sum_exp,
-           round((obs - exp) * (obs - exp) / var, 6) AS cmh
-    FROM s
-    """,
-)
-def cmh_test_priority_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cochran-Mantel-Haenszel test of urgent-priority x finished-
-    status association STRATIFIED by customer nation — the
-    confounder-adjusted 2x2 test (chi2_priority_segment pools
-    everything and is Simpson's-paradox-prone; CMH combines
-    per-stratum evidence instead): CMH = (sum(n11 - E))^2 / sum(V),
-    E and hypergeometric V per stratum (no continuity correction —
-    documented, oracle-identical). One join + one stratum rollup is
-    the corpus-sized work; the test statistic is 25-row broadcast
-    arithmetic on exact integer ratios."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    cells = (
-        o.join(c, o["o_custkey"] == c["c_custkey"])
-        .groupBy(F.col("c_nationkey").alias("stratum"))
-        .agg(
-            F.sum(
-                F.when(
-                    (F.col("o_orderpriority") == "1-URGENT")
-                    & (F.col("o_orderstatus") == "F"),
-                    1,
-                ).otherwise(0)
-            ).cast("long").alias("n11"),
-            F.sum(
-                F.when(F.col("o_orderpriority") == "1-URGENT", 1).otherwise(0)
-            ).cast("long").alias("r1"),
-            F.sum(
-                F.when(F.col("o_orderstatus") == "F", 1).otherwise(0)
-            ).cast("long").alias("c1"),
-            F.count(F.lit(1)).cast("long").alias("n"),
-        )
-        .filter(F.col("n") > 1)
-        .persist()
-    )
-    k = cells.agg(F.count(F.lit(1)).cast("long").alias("k_strata"))
-    s = cells.agg(
-        F.sum("n11").alias("obs"),
-        F.sum(F.col("r1") * F.col("c1") / F.col("n")).alias("exp"),
-        F.sum(
-            F.col("r1")
-            * (F.col("n") - F.col("r1"))
-            * F.col("c1")
-            * (F.col("n") - F.col("c1"))
-            / (F.col("n") * F.col("n") * (F.col("n") - 1.0))
-        ).alias("var"),
-    )
-    return s.crossJoin(F.broadcast(k)).select(
-        "k_strata",
-        F.col("obs").cast("long").alias("sum_obs"),
-        F.round("exp", 6).alias("sum_exp"),
-        F.round(
-            (F.col("obs") - F.col("exp")) * (F.col("obs") - F.col("exp"))
-            / F.col("var"),
-            6,
-        ).alias("cmh"),
-    )
-
-
 @query(
     "overdispersion_event_counts",
     """
@@ -2138,8 +2054,11 @@ def attribute_assortativity_nation(spark: SparkSession, sf_dir: str) -> DataFram
     matches DuckDB bit-for-bit regardless of partial-sum merge order:
     tr = sd/m2, sab = sr2/m2², and Newman's
     r = (tr - sab)/(1 - sab) = (m2·sd - sr2)/(m2² - sr2).
-    (Long products are exact here: m2² stays far below 2^63 for any
-    bounded-sample graph this device produces.)"""
+    The long products m2·sd and m2² are exact below 2^63 (m2 up to
+    ~3.04e9, about 1.5e9 sampled edges) and cannot wrap silently past
+    it: ``get_spark`` sessions run with ``spark.sql.ansi.enabled`` on
+    (the Spark 4 default), so an overflowing product raises
+    ARITHMETIC_OVERFLOW, as the DuckDB oracle does on BIGINT."""
     sup = _t(spark, sf_dir, "supplier").select(
         F.col("s_suppkey").cast("long").alias("id"),
         F.col("s_nationkey").cast("long").alias("nat"),

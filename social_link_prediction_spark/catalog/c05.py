@@ -1,20 +1,25 @@
-"""Catalog part 5/6: inference + experimentation + anomaly families (exact tests, Bayes A/B,
+"""Catalog part 5/7: inference + experimentation + anomaly families (exact tests, Bayes A/B,
 sketch audits, encodings, survival/calibration, outlier detectors).
 
-Continuation of the single registration script split at top-level
-statement boundaries; see catalog/__init__.py for the chain design.
+Imports the shared core from ``_base`` and the helpers it reuses from
+earlier family modules; see catalog/__init__.py.
 """
-from __future__ import annotations  # noqa: F401
+from __future__ import annotations
 
-from social_link_prediction_spark.catalog import c04 as _prev
+import math
 
-# continue the registration script: adopt the full accumulated
-# namespace (incl. _-prefixed helpers and the shared registries)
-globals().update(
-    {k: v for k, v in vars(_prev).items() if not k.startswith("__")}
-)
-del _prev
+from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
 
+from social_link_prediction_spark.catalog._base import _DUCK_H60, _t, _trunc_ntz, query
+from social_link_prediction_spark.catalog.c01 import _DUCK_TOKS
+from social_link_prediction_spark.catalog.c02 import _AS_ERF, _FIS_MINSUP
+from social_link_prediction_spark.catalog.c04 import _lgamma_sql
+from social_link_prediction_spark.graph import testgraph as tg
+from social_link_prediction_spark.ml import linksplit as mls
+from social_link_prediction_spark.operators import stats as st
+from social_link_prediction_spark.pipelines import similarity as sim
+from social_link_prediction_spark.pipelines import text as ptx
 
 
 def _lfact_sql(k: str) -> str:

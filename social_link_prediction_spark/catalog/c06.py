@@ -1,20 +1,23 @@
-"""Catalog part 6/6: blocking + audits + optimizer-analytics tail (sorted-neighborhood,
+"""Catalog part 6/7: blocking + audits + optimizer-analytics tail (sorted-neighborhood,
 heavy-hitter merges, SimRank, Selinger join order, ridge CV, fraud audits).
 
-Continuation of the single registration script split at top-level
-statement boundaries; see catalog/__init__.py for the chain design.
+Imports the shared core from ``_base`` and the helpers it reuses from
+earlier family modules; see catalog/__init__.py.
 """
-from __future__ import annotations  # noqa: F401
+from __future__ import annotations
 
-from social_link_prediction_spark.catalog import c05 as _prev
+import math
 
-# continue the registration script: adopt the full accumulated
-# namespace (incl. _-prefixed helpers and the shared registries)
-globals().update(
-    {k: v for k, v in vars(_prev).items() if not k.startswith("__")}
-)
-del _prev
+from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
 
+from social_link_prediction_spark.catalog._base import _DUCK_H60, _t, query
+from social_link_prediction_spark.catalog.c02 import _AS_ERF, _III_HUB_CAP
+from social_link_prediction_spark.catalog.c05 import _duck_taildep_sql
+from social_link_prediction_spark.graph import testgraph as tg
+from social_link_prediction_spark.operators import stats as st
+from social_link_prediction_spark.operators import windows as win
+from social_link_prediction_spark.pipelines import similarity as sim
 
 
 @query("tail_dependence_qty_price", _duck_taildep_sql())
@@ -4888,6 +4891,44 @@ def domain_classifier_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _order_ship_base(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Persisted order-grain training frame of the tree family: price
+    in cents ``pc``, line count ``nl``, rounded quantity ``sq`` and the
+    fast-ship label ``pos`` (every line shipped within 30 days of the
+    order date)."""
+    o = _t(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_totalprice", "o_orderdate"
+    )
+    li = _t(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_quantity", "l_shipdate"
+    )
+    # r10 (guide §2.3 "aggregate before you shuffle"): the fast-ship
+    # label max(shipdate <= orderdate+30) over an order's lines equals
+    # min(shipdate) <= orderdate+30, so the per-order line stats
+    # (nl, sq, min_ship) reduce map-side over lineitem ALONE and the
+    # join moves |orders| pre-aggregated rows instead of |lineitem| raw
+    # lines through the join + keyed re-aggregation. Identical rows at
+    # sf0.01/sf0.1; cold A/B 1.11x med — and the scale-correct shape.
+    lag = li.groupBy("l_orderkey").agg(
+        F.count(F.lit(1)).cast("long").alias("nl"),
+        F.sum(F.round("l_quantity").cast("long")).cast("long").alias("sq"),
+        F.min(F.to_date("l_shipdate")).alias("minship"),
+    )
+    return (
+        o.join(lag, o["o_orderkey"] == lag["l_orderkey"])
+        .select(
+            F.round(F.col("o_totalprice") * 100).cast("long").alias("pc"),
+            "nl", "sq",
+            F.when(
+                F.col("minship")
+                <= F.date_add(F.to_date("o_orderdate"), 30),
+                1,
+            ).otherwise(0).cast("long").alias("pos"),
+        )
+        .persist()
+    )
+
+
 @query(
     "decision_tree_depth2",
     """
@@ -5007,37 +5048,7 @@ def decision_tree_depth2(spark: SparkSession, sf_dir: str) -> DataFrame:
     positive rate, Gini before/after. The child pass reuses the same
     machinery partitioned by the root's side assignment (root split
     broadcast, no collect)."""
-    o = _t(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice", "o_orderdate"
-    )
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_quantity", "l_shipdate"
-    )
-    # r10 (guide §2.3 "aggregate before you shuffle"): the fast-ship
-    # label max(shipdate <= orderdate+30) over an order's lines equals
-    # min(shipdate) <= orderdate+30, so the per-order line stats
-    # (nl, sq, min_ship) reduce map-side over lineitem ALONE and the
-    # join moves |orders| pre-aggregated rows instead of |lineitem| raw
-    # lines through the join + keyed re-aggregation. Identical rows at
-    # sf0.01/sf0.1; cold A/B 1.11x med — and the scale-correct shape.
-    lag = li.groupBy("l_orderkey").agg(
-        F.count(F.lit(1)).cast("long").alias("nl"),
-        F.sum(F.round("l_quantity").cast("long")).cast("long").alias("sq"),
-        F.min(F.to_date("l_shipdate")).alias("minship"),
-    )
-    base = (
-        o.join(lag, o["o_orderkey"] == lag["l_orderkey"])
-        .select(
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("pc"),
-            "nl", "sq",
-            F.when(
-                F.col("minship")
-                <= F.date_add(F.to_date("o_orderdate"), 30),
-                1,
-            ).otherwise(0).cast("long").alias("pos"),
-        )
-        .persist()
-    )
+    base = _order_ship_base(spark, sf_dir)
 
     def _lng(df: DataFrame, keys: list[str]) -> DataFrame:
         parts = []
@@ -5535,33 +5546,7 @@ def adaboost_two_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
     accuracy of the signed ensemble. Extends the tree family
     (info-gain stump, depth-2 CART) with the boosting member, and
     MLlib's GBTClassifier is the production path."""
-    o = _t(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice", "o_orderdate"
-    )
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_quantity", "l_shipdate"
-    )
-    # r10: same pre-aggregation as decision_tree_depth2 (guide §2.3) —
-    # max(shipdate <= cutoff) over an order's lines == min(shipdate) <=
-    # cutoff, so the line stats reduce map-side before the join.
-    lag = li.groupBy("l_orderkey").agg(
-        F.count(F.lit(1)).cast("long").alias("nl"),
-        F.sum(F.round("l_quantity").cast("long")).cast("long").alias("sq"),
-        F.min(F.to_date("l_shipdate")).alias("minship"),
-    )
-    base = (
-        o.join(lag, o["o_orderkey"] == lag["l_orderkey"])
-        .select(
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("pc"),
-            "nl", "sq",
-            F.when(
-                F.col("minship")
-                <= F.date_add(F.to_date("o_orderdate"), 30),
-                1,
-            ).otherwise(0).cast("long").alias("pos"),
-        )
-        .persist()
-    )
+    base = _order_ship_base(spark, sf_dir)
 
     def _lng(df, extra):
         parts = []

@@ -2,19 +2,19 @@
 (VERDICT r7 item 8: drive the MLlib train/evaluate/store path through a
 hashed oracle comparison the way etl_pipeline_counts gated EP1).
 
-Continuation of the single registration script split at top-level
-statement boundaries; see catalog/__init__.py for the chain design.
+Imports the shared core from ``_base`` and the helpers it reuses from
+earlier family modules; see catalog/__init__.py.
 """
-from __future__ import annotations  # noqa: F401
+from __future__ import annotations
 
-from social_link_prediction_spark.catalog import c06 as _prev
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-# continue the registration script: adopt the full accumulated
-# namespace (incl. _-prefixed helpers and the shared registries)
-globals().update(
-    {k: v for k, v in vars(_prev).items() if not k.startswith("__")}
-)
-del _prev
+from social_link_prediction_spark.catalog._base import _DUCK_H60, _t, query
+from social_link_prediction_spark.catalog.c01 import _session_tmp
+from social_link_prediction_spark.ml import linksplit as mls
+from social_link_prediction_spark.ml import predict as mlp
+from social_link_prediction_spark.operators import dedup as dd
 
 
 # M-ledger community graph: 24 communities x 12 nodes, intra-community

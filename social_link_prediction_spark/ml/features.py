@@ -160,10 +160,3 @@ def assemble_features(
         parts.append(F.coalesce(F.col(c).cast("array<double>"), F.array()))
     parts.append(F.array(*[F.coalesce(F.col(c).cast("double"), F.lit(0.0)) for c in scalar_cols]))
     return df.withColumn(out, F.concat(*parts))
-
-
-def to_mllib_vector(df: DataFrame, array_col: str, out: str = "features_vec") -> DataFrame:
-    """array<double> -> MLlib dense vector (for Pipeline estimators)."""
-    from pyspark.ml.functions import array_to_vector
-
-    return df.withColumn(out, array_to_vector(F.col(array_col)))

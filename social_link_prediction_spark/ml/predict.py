@@ -10,14 +10,11 @@ Serving queries preserve the reference's exact arithmetic:
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from social_link_prediction_spark.graph.iterate import hint
 from social_link_prediction_spark.operators.aggregates import total_degree
-from social_link_prediction_spark.pipelines.similarity import cosine_similarity
 
 BIOLOGICAL_RELS = ("father", "mother", "sibling", "child", "spouse")
 HUMAN_SRC_ONLY = ("educated_at", "work_at", "award_received")
@@ -28,18 +25,13 @@ TABOO_FOR_SPOUSE = ("sibling", "father", "mother")
 def pair_features(
     pairs: DataFrame,
     edges: DataFrame,
-    vertices: DataFrame | None = None,
-    embeddings: DataFrame | None = None,
-    distinct_edges: bool = False,
     edges_symmetric: bool = False,
-    max_neighbor_degree: int | None = None,
-    encode_ids: bool = False,
 ) -> DataFrame:
     """Engineered link-prediction features per (src, dst) pair:
-    common-neighbor count, Adamic-Adar, neighbor-Jaccard, preferential
-    attachment, and embedding cosine when an embedding table is given.
-    All set math is semi-join/agg — the neighbor lists are never
-    materialized per pair.
+    common-neighbor count, Adamic-Adar, neighbor-Jaccard and
+    preferential attachment, plus both endpoint degrees. All set math
+    is semi-join/agg — the neighbor lists are never materialized per
+    pair.
 
     The degree table is referenced three times (wedge weights +
     src/dst joins). persist() alone leaves those joins as sort-merge:
@@ -58,77 +50,28 @@ def pair_features(
     # every undirected edge exactly once (e.g. the shared symmetric
     # part-supplier view) — symmetrizing again would DOUBLE each edge
     # and pay a |2E| dedup shuffle to collapse it; use it as-is.
-    # distinct_edges: the directed list is duplicate-free with no edge
-    # present in both orientations (bipartite extracts) — the
-    # symmetrizing union then cannot collide and the dedup is skipped.
     if edges_symmetric:
         und = edges.select("src", "dst").persist()
     else:
-        und = edges.select("src", "dst").unionAll(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        und = (
+            edges.select("src", "dst")
+            .unionAll(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+            .dropDuplicates()
+            .persist()
         )
-        if not distinct_edges:
-            und = und.dropDuplicates()
-        und = und.persist()
     deg = (
         und.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("deg")).persist()
     )
 
     n_deg = deg.count()
 
-    # encode_ids: dictionary-encode node ids to longs for everything
-    # between here and the final pair join — the wedge set (Σ C(deg,2)
-    # rows, the biggest intermediate by far) is shuffled and
-    # hash-aggregated on its keys, and long keys aggregate ~2.5x
-    # faster than string ids in steady state. The dict adds two
-    # broadcast joins, two cache materializations, and extra codegen
-    # to the cold path — measured A/B (one-shot, fresh session, sf0.1)
-    # the string path wins (~10s vs ~14s median), so encoding is
-    # opt-in: turn it on for repeated-call / cached-graph workloads
-    # where the steady-state agg speedup amortizes the setup.
-    # monotonically_increasing_id is shuffle-free and per-row unique
-    # (NOT a global sort — that would serialize one task at a billion
-    # nodes); the dict is persisted so every encode join sees one
-    # consistent assignment.
-    if encode_ids:
-        ndict = deg.select(
-            "id", "deg", F.monotonically_increasing_id().alias("nid")
-        ).persist()
-
-        def _enc(alias_id: str, alias_nid: str, with_deg: str | None = None) -> DataFrame:
-            cols = [F.col("id").alias(alias_id), F.col("nid").alias(alias_nid)]
-            if with_deg:
-                cols.append(F.col("deg").alias(with_deg))
-            return hint(ndict.select(*cols), n_deg)
-
-        # Encode the pair frame once; it feeds the adjacency
-        # restriction and the final feature join, so persist it. LEFT
-        # joins: a pair endpoint absent from the graph has no dict
-        # entry and must survive to the zero-filled output, not be
-        # dropped (its null nid can never match a wedge key — cn keys
-        # are strictly lo < hi).
-        pe = (
-            pairs.join(_enc("src", "src_nid"), "src", "left")
-            .join(_enc("dst", "dst_nid"), "dst", "left")
-            .persist()
-        )
-        src_key, dst_key = "src_nid", "dst_nid"
-        adj = (
-            und.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-            .join(_enc("a", "node"), "a")
-            .join(_enc("b", "nbr", with_deg="nbr_deg"), "b")
-            .select("node", "nbr", "nbr_deg")
-        )
-    else:
-        pe = pairs
-        src_key, dst_key = "src", "dst"
-        # Attach the wedge-center degree to the adjacency BEFORE wedge
-        # generation: the adjacency is |E'| rows while the wedge set is
-        # Σ C(deg, 2) — on dense blocks orders of magnitude larger.
-        adj = und.select(F.col("src").alias("node"), F.col("dst").alias("nbr")).join(
-            hint(deg.select(F.col("id").alias("nbr"), F.col("deg").alias("nbr_deg")), n_deg),
-            "nbr",
-        )
+    # Attach the wedge-center degree to the adjacency BEFORE wedge
+    # generation: the adjacency is |E'| rows while the wedge set is
+    # Σ C(deg, 2) — on dense blocks orders of magnitude larger.
+    adj = und.select(F.col("src").alias("node"), F.col("dst").alias("nbr")).join(
+        hint(deg.select(F.col("id").alias("nbr"), F.col("deg").alias("nbr_deg")), n_deg),
+        "nbr",
+    )
 
     # Common neighbors by wedge enumeration: restrict the adjacency to
     # nodes that actually appear in `pairs` (semi-join), then expand
@@ -136,8 +79,8 @@ def pair_features(
     # wedge centers — independent of |pairs| — instead of |pairs| × deg
     # probing, which is quadratic when pairs ≈ all-pairs.
     nodes_in_pairs = (
-        pe.select(F.col(src_key).alias("node"))
-        .unionAll(pe.select(F.col(dst_key).alias("node")))
+        pairs.select(F.col("src").alias("node"))
+        .unionAll(pairs.select(F.col("dst").alias("node")))
         .dropDuplicates()
     )
     nbd = adj.join(nodes_in_pairs, "node", "left_semi")
@@ -148,12 +91,7 @@ def pair_features(
     # struct explosion defeats whole-stage codegen, while the join
     # streams codegen'd rows end-to-end. It also carries no per-group
     # state: a hub center's C(deg,2) pairs stream through the join
-    # instead of building a deg-sized array in agg memory. For ultra
-    # hubs (deg ~10^6) the quadratic blowup is the enemy under either
-    # formulation — pass max_neighbor_degree to drop those centers;
-    # their per-wedge Adamic-Adar weight 1/log(deg) is negligible.
-    if max_neighbor_degree is not None:
-        nbd = nbd.filter(F.col("nbr_deg") <= max_neighbor_degree)
+    # instead of building a deg-sized array in agg memory.
     nbd = nbd.persist()  # both self-join sides read it
     wa = nbd.select(F.col("nbr").alias("c"), F.col("node").alias("lo"), "nbr_deg")
     wb = nbd.select(F.col("nbr").alias("c"), F.col("node").alias("hi"))
@@ -166,11 +104,11 @@ def pair_features(
             F.sum(F.lit(1.0) / F.log(F.col("nbr_deg") + F.lit(1.0))).alias("adamic_adar"),
         )
     )
-    out = (
-        pe.withColumn("lo", F.least(src_key, dst_key))
-        .withColumn("hi", F.greatest(src_key, dst_key))
+    return (
+        pairs.withColumn("lo", F.least("src", "dst"))
+        .withColumn("hi", F.greatest("src", "dst"))
         .join(cn, ["lo", "hi"], "left")
-        .drop("lo", "hi", "src_nid", "dst_nid")
+        .drop("lo", "hi")
         .na.fill({"common_neighbors": 0, "adamic_adar": 0.0})
         .join(
             hint(deg.select(F.col("id").alias("src"), F.col("deg").alias("src_deg")), n_deg),
@@ -192,27 +130,6 @@ def pair_features(
             ),
         )
     )
-    if vertices is not None:
-        vt = vertices.select("id", F.col("type").alias("vt"))
-        out = (
-            out.join(vt.select(F.col("id").alias("src"), F.col("vt").alias("src_type")), "src", "left")
-            .join(vt.select(F.col("id").alias("dst"), F.col("vt").alias("dst_type")), "dst", "left")
-            .withColumn("same_type", (F.col("src_type") == F.col("dst_type")).cast("int"))
-        )
-    if embeddings is not None:
-        emb = embeddings.select("id", F.col("embedding").cast("array<double>").alias("e"))
-        out = (
-            out.join(emb.select(F.col("id").alias("src"), F.col("e").alias("src_emb")), "src", "left")
-            .join(emb.select(F.col("id").alias("dst"), F.col("e").alias("dst_emb")), "dst", "left")
-            .withColumn(
-                "emb_cosine",
-                F.when(
-                    F.col("src_emb").isNotNull() & F.col("dst_emb").isNotNull(),
-                    cosine_similarity(F.col("src_emb"), F.col("dst_emb")),
-                ).otherwise(F.lit(0.0)),
-            )
-            .drop("src_emb", "dst_emb")
-        )
     return out
 
 

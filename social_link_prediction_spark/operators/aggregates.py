@@ -10,40 +10,13 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-# --- A1/A2: group-concat unique (transformer.py:74-77,192-197)
-def group_concat_unique(
-    df: DataFrame, key: str, value_cols: Sequence[str], sep: str = ", "
-) -> DataFrame:
-    """``groupby(key)[col].apply(', '.join(unique))`` — Spark-native as
-    ``collect_set`` (dedup) + ``sort_array`` (deterministic order; the
-    reference's order is encounter order, which has no distributed
-    analog) + ``concat_ws``. Keep the array too — downstream explode is
-    cheaper from the array than re-splitting the string.
-    """
-    aggs = []
-    for c in value_cols:
-        arr = F.array_sort(F.collect_set(F.col(c)))
-        aggs.append(arr.alias(f"{c}_arr"))
-        aggs.append(F.concat_ws(sep, arr).alias(c))
-    return df.groupBy(key).agg(*aggs)
 
 
 # --- A3/A18: out-degree per key (NB cells 83,87)
 def degree(df: DataFrame, key: str, out: str = "degree") -> DataFrame:
     return df.groupBy(key).agg(F.count(F.lit(1)).alias(out))
-
-
-def degree_stats(df: DataFrame, key: str) -> DataFrame:
-    """mean/max/min degree — two-level aggregation."""
-    return degree(df, key).agg(
-        F.avg("degree").alias("mean_degree"),
-        F.max("degree").alias("max_degree"),
-        F.min("degree").alias("min_degree"),
-    )
 
 
 # --- A4: value_counts (NB cells 78,95,97,100)

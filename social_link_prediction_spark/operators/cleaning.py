@@ -155,17 +155,3 @@ def assemble_text(df: DataFrame, fields: dict[str, str], out: str = "full_text")
 
 # --- P12 lives in ml/features.py (needs aggregates); P13 is F.log1p
 # --- P14: constant typing columns = withColumn(..., lit(...)) at call sites
-# --- P15: filename -> relation label parse (transformer.py:23-27)
-def parse_filename_tokens(path_col: Column | str) -> dict[str, Column]:
-    """``raw_data_{rel}_{objtype}.json`` -> relation + object-type columns
-    derived from ``input_file_name()`` (the reference derives them from
-    the glob loop; we derive them per-row so one multi-file scan works).
-    """
-    c = F.col(path_col) if isinstance(path_col, str) else path_col
-    base = F.element_at(F.split(c, "/"), -1)
-    stem = F.regexp_replace(base, "\\.json$", "")
-    toks = F.split(F.regexp_replace(stem, "^raw_data_", ""), "_")
-    return {
-        "relationship_label": F.concat_ws("_", F.slice(toks, 1, F.size(toks) - 1)),
-        "object_type": F.element_at(toks, -1),
-    }

@@ -24,11 +24,7 @@ def union_all(dfs: Sequence[DataFrame]) -> DataFrame:
     return out
 
 
-# --- D2/D3: full-row / key distinct (NB cell 29; transformer.py:241)
-def distinct_rows(df: DataFrame) -> DataFrame:
-    return df.dropDuplicates()
-
-
+# --- D2/D3: key distinct (NB cell 29; transformer.py:241)
 def distinct_by_key(
     df: DataFrame, keys: Sequence[str], order_by: Sequence[Column] | None = None
 ) -> DataFrame:

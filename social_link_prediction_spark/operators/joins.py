@@ -37,28 +37,6 @@ def not_exists_in(df: DataFrame, other: DataFrame, on: Sequence[str]) -> DataFra
     return df.join(other, on=list(on), how="left_anti")
 
 
-def symmetric_exists(
-    pairs: DataFrame,
-    edges: DataFrame,
-    pair_src: str,
-    pair_dst: str,
-    edge_src: str,
-    edge_dst: str,
-) -> DataFrame:
-    """J8 symmetric case: does an edge exist in either orientation?
-    Canonicalize both sides with least/greatest, then semi-join once —
-    half the probes of the reference's forward+backward double lookup.
-    """
-    p = pairs.withColumn("__a", F.least(F.col(pair_src), F.col(pair_dst))).withColumn(
-        "__b", F.greatest(F.col(pair_src), F.col(pair_dst))
-    )
-    e = edges.select(
-        F.least(F.col(edge_src), F.col(edge_dst)).alias("__a"),
-        F.greatest(F.col(edge_src), F.col(edge_dst)).alias("__b"),
-    ).dropDuplicates()
-    return p.join(e, on=["__a", "__b"], how="left_semi").drop("__a", "__b")
-
-
 def asof_join(
     left: DataFrame,
     right: DataFrame,

@@ -34,11 +34,6 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
-def l2_normalize(a: Column) -> Column:
-    n = l2_norm(a)
-    return F.transform(a, lambda x: x / n)
-
-
 def _query_array(query_vec: list[float]) -> Column:
     return F.array([F.lit(float(x)) for x in query_vec])
 

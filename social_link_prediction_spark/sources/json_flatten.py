@@ -6,12 +6,11 @@ type columns from FILENAME tokens, and concatenates. Spark-first
 design: ONE multi-file ``spark.read.json`` (schema merged across
 files), with per-row provenance from ``input_file_name()`` — the scan
 parallelizes across files and within files, and Catalyst prunes the
-binding structs that are never projected.
+binding structs that are never projected. ``__main__.run_etl`` types
+each row's relation from that ``_source_file`` column.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,23 +41,6 @@ def read_sparql_json(spark: SparkSession, path: str | list[str]) -> DataFrame:
         if "xml:lang" in sub:
             cols.append(F.col(f"b.{var}.`xml:lang`").alias(f"{var}.xml:lang"))
     return rows.select(*cols)
-
-
-def filename_typed_union(spark: SparkSession, json_dir: str) -> DataFrame:
-    """S7: one scan over ``raw_data_{rel}_{objtype}.json`` files with
-    relation/object-type columns parsed from the filename per row
-    (reference derives them in the glob loop, transformer.py:20-38)."""
-    df = read_sparql_json(spark, os.path.join(json_dir, "*.json"))
-    base = F.element_at(F.split(F.col("_source_file"), "/"), -1)
-    stem = F.regexp_replace(F.regexp_replace(base, "\\.json$", ""), "^raw_data_", "")
-    toks = F.split(stem, "_")
-    return df.withColumn(
-        "relationshipLabel.value",
-        F.coalesce(
-            F.col("`relationshipLabel.value`") if "relationshipLabel.value" in df.columns else F.lit(None),
-            F.concat_ws("_", F.slice(toks, 1, F.size(toks) - 1)),
-        ),
-    ).withColumn("objectType.value", F.element_at(toks, -1))
 
 
 def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:

@@ -1,11 +1,13 @@
 """SPARK_GRAFT_CONF hygiene: malformed pairs (no '=', empty key or
 value) must raise instead of silently setting an empty conf value
 (ADVICE r9). Tested without building a session — the validation runs
-before getOrCreate, so a raise never reaches the JVM."""
+before getOrCreate, so a raise never reaches the JVM. Sessions run with
+ANSI mode on, so BIGINT overflow raises instead of wrapping."""
 
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from social_link_prediction_spark import session as sess
 
@@ -35,3 +37,13 @@ def test_wellformed_pairs_accepted(monkeypatch, spark):
     )
     s = sess.get_spark("conf-test-ok")
     assert s is not None
+
+
+def test_sessions_run_with_ansi_on(spark):
+    # Catalog long arithmetic (attribute_assortativity_nation's m2 * m2)
+    # relies on ANSI mode: an overflowing BIGINT product must raise, as
+    # it does on the DuckDB oracle, instead of wrapping silently.
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    big = F.col("id") + 4_000_000_000
+    with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
+        spark.range(1).select((big * big).alias("p")).collect()

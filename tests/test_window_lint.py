@@ -117,9 +117,6 @@ LEDGER = {
     'catalog/c03.py|wprev = Window.orderBy("dur").rowsBetween(Window.unboundedPreceding, -1)':
         ('bounded',
          'duration frame (calendar-span-bounded)'),
-    'catalog/c04.py|"n", F.row_number().over(Window.orderBy("day")).cast("long").alias("t")':
-        ('bounded',
-         'calendar-day frame'),
     'catalog/c04.py|"rb", F.row_number().over(Window.orderBy(F.col("s").desc(), "doc_id"))':
         ('bounded',
          'runs on the _RRF_DEPTH-row head (limit upstream)'),
@@ -189,9 +186,6 @@ LEDGER = {
     'catalog/c04.py|wc = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, 0)':
         ('bounded',
          'distinct |dy| over day pairs (calendar-span^2-bounded)'),
-    'catalog/c04.py|wcum = Window.orderBy("dur").rowsBetween(Window.unboundedPreceding, 0)':
-        ('bounded',
-         'duration frame (calendar-span-bounded)'),
     'catalog/c04.py|wd = Window.orderBy("day")':
         ('bounded',
          'calendar-day frame'),
@@ -204,9 +198,6 @@ LEDGER = {
     'catalog/c04.py|wp = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, -1)':
         ('bounded',
          'distinct |dy| over day pairs (calendar-span^2-bounded)'),
-    'catalog/c04.py|wprev = Window.orderBy("dur").rowsBetween(Window.unboundedPreceding, -1)':
-        ('bounded',
-         'duration frame (calendar-span-bounded)'),
     'catalog/c05.py|w = Window.orderBy("day")  # calendar-bounded frame (<=123 rows)':
         ('bounded',
          'calendar-day frame (annotated inline)'),

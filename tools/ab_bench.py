@@ -4,15 +4,16 @@ The host this round shows variable CPU steal, so absolute wall times
 drift minute to minute; alternating old/new in ONE session makes the
 comparison robust to that drift (both variants sample the same load).
 
-Usage: python tools/ab_bench.py <query_name> [reps]
-The candidate lives in tools/ab_candidate.py as `candidate(spark, sf_dir)`.
-Both variants get one untimed warmup (materializes shared persisted
+Usage: python tools/ab_bench.py <query_name> <candidate.py> [reps]
+The candidate file defines `candidate(spark, sf_dir)`; keep it out of
+the repository (tools/ab_candidate.py is gitignored for that). Both
+variants get one untimed warmup (materializes shared persisted
 frames so neither side pays cache-build in the timed reps).
 """
 
 from __future__ import annotations
 
-import importlib
+import importlib.util
 import os
 import statistics
 import sys
@@ -30,13 +31,19 @@ def run(fn, spark, sf_dir) -> float:
     return time.perf_counter() - t0
 
 
+def load_candidate(path: str):
+    spec = importlib.util.spec_from_file_location("ab_candidate", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod.candidate
+
+
 def main() -> None:
-    name = sys.argv[1]
-    reps = int(sys.argv[2]) if len(sys.argv) > 2 else 4
+    name, cand_path = sys.argv[1], sys.argv[2]
+    reps = int(sys.argv[3]) if len(sys.argv) > 3 else 4
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cand_mod = importlib.import_module("tools.ab_candidate")
     old = catalog.QUERIES[name]
-    new = cand_mod.candidate
+    new = load_candidate(cand_path)
     spark = get_spark(
         "ab-bench", extra_conf={"spark.ui.showConsoleProgress": "false"}
     )
