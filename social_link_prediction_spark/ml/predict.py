@@ -130,7 +130,6 @@ def pair_features(
             ),
         )
     )
-    return out
 
 
 PAIR_FEATURE_COLS = [

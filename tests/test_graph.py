@@ -970,6 +970,44 @@ def test_luby_coloring_never_exceeds_palette(spark):
     assert sorted(two.values()) == [0, 1]
 
 
+# Degenerate inputs for MIS and coloring, with the outputs pinned (ids
+# are hashed into priorities, so each verdict is deterministic): an
+# empty edge set, a single self-loop, duplicate plus reversed edges,
+# two components, and rows with a NULL endpoint (dropped).
+_MIS_DEGENERATE = [
+    ([], {}, {}),
+    ([(1, 1)], {}, {}),
+    ([(1, 2), (1, 2), (2, 1)], {1: 1, 2: 0}, {1: "excluded", 2: "mis"}),
+    (
+        [(1, 2), (2, 1), (3, 4)],
+        {1: 1, 2: 0, 3: 0, 4: 1},
+        {1: "excluded", 2: "mis", 3: "mis", 4: "excluded"},
+    ),
+    ([(1, None), (None, 2), (None, None), (1, 2)], {1: 1, 2: 0}, {1: "excluded", 2: "mis"}),
+]
+
+
+@pytest.mark.parametrize("edges,coloring,mis", _MIS_DEGENERATE)
+def test_mis_and_coloring_degenerate_inputs(spark, edges, coloring, mis):
+    from social_link_prediction_spark.graph import mis as gmis
+
+    e = spark.createDataFrame(edges, "src long, dst long")
+    colors = 2
+    got = {r.id: r.color for r in gmis.luby_coloring(e, colors, 2).collect()}
+    assert got == coloring
+    assert all(c is None or 0 <= c < colors for c in got.values())
+    for u, v in edges:
+        if u is not None and v is not None and u != v:
+            assert got[u] is None or got[u] != got[v]
+    assert {r.id: r.status for r in gmis.maximal_independent_set(e, 2).collect()} == mis
+    # a one-color budget returns the same nodes, inside its palette
+    one = gmis.luby_coloring(e, colors=1, rounds_per_color=1).collect()
+    assert {r.id for r in one} == set(coloring)
+    assert all(r.color in (0, None) for r in one)
+    with pytest.raises(ValueError):
+        gmis.luby_coloring(e, colors=2, rounds_per_color=0)
+
+
 def test_label_spreading_harmonic_properties(spark):
     """Seeds stay clamped; interior scores are strict averages lying
     between the seed values (maximum principle of harmonic functions);

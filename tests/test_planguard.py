@@ -7,6 +7,9 @@ no row-at-a-time Python evaluation (BatchEvalPython) — the two plan
 shapes that do not survive a 100x scale-up. tools/plan_audit.py writes
 the full headline audit to PLANS.md; this test pins the invariant in
 CI for the queries added in this session.
+
+The Luby guards at the end pin the job count of luby_coloring and its
+agreement with the DuckDB replay over a grid of round budgets.
 """
 
 from __future__ import annotations
@@ -388,3 +391,80 @@ def test_plan_audit_counts_python_nodes_and_rdd_scans(spark):
     assert counts(rows) == (0, 1)
     assert counts(rows.mapInPandas(lambda it: it, rows.schema)) == (1, 1)
     assert counts(spark.range(3).selectExpr("id * 2 AS x")) == (0, 0)
+
+
+# The Luby round structure: the coloring stops each color at its last
+# round's winners and skips the residual after the last color. Both
+# shortcuts must agree with the DuckDB replay at every budget, not only
+# at the catalog's (3 colors, 3 rounds).
+SF01_DIR = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+
+
+@pytest.fixture(scope="module")
+def luby_oracle(spark):
+    import duckdb
+
+    from social_link_prediction_spark.graph import testgraph as tg
+
+    path = os.path.join(SF01_DIR, "supplier.parquet")
+    edges = tg.sampled_edges(tg.supplier_nodes(spark.read.parquet(path)), 400, "mis").persist()
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW supplier AS SELECT * FROM '{path}'")
+    yield edges, con
+    con.close()
+    edges.unpersist()
+
+
+def _same_as_oracle(df, con, sql):
+    """Spark frame vs DuckDB query under the correctness gate's value hash."""
+    from tools.verify_local import value_hash
+
+    res = con.execute(sql)
+    return value_hash(df.columns, [tuple(r) for r in df.collect()]) == value_hash(
+        [d[0] for d in res.description], res.fetchall()
+    )
+
+
+@pytest.mark.skipif(not os.path.isdir(SF01_DIR), reason="sf0.01 testdata not present")
+@pytest.mark.parametrize("colors,rounds", [(1, 4), (2, 1), (3, 3), (4, 2)])
+def test_luby_coloring_matches_oracle_grid(luby_oracle, colors, rounds):
+    from social_link_prediction_spark.catalog.c02 import _duck_coloring_sql
+    from social_link_prediction_spark.graph import mis as gmis
+
+    edges, con = luby_oracle
+    got = gmis.luby_coloring(edges, colors, rounds)
+    assert _same_as_oracle(got, con, _duck_coloring_sql(colors, rounds))
+
+
+@pytest.mark.skipif(not os.path.isdir(SF01_DIR), reason="sf0.01 testdata not present")
+@pytest.mark.parametrize("rounds", [1, 3, 8])
+def test_mis_matches_oracle_grid(luby_oracle, rounds):
+    from social_link_prediction_spark.catalog.c02 import _duck_mis_sql
+    from social_link_prediction_spark.graph import mis as gmis
+
+    edges, con = luby_oracle
+    got = gmis.maximal_independent_set(edges, rounds)
+    assert _same_as_oracle(got, con, _duck_mis_sql(rounds))
+
+
+def test_luby_coloring_job_count(spark):
+    """Per-job overhead sets luby_coloring's cost on small graphs, so
+    the job count is the guard: on the benchmark-shaped input (100
+    node ids sampled at 50 bp, 2 colors, 1 round each) the call runs
+    18 jobs, collect included. Calling the full MIS per color, with
+    its per-round bookkeeping, ran 55."""
+    from social_link_prediction_spark.graph import mis as gmis
+    from social_link_prediction_spark.graph import testgraph as tg
+
+    sc = spark.sparkContext
+    edges = tg.sampled_edges(spark.range(1, 101), 50, "und").persist()
+    edges.count()
+    sc.setJobGroup("luby-job-count", "luby_coloring job count")
+    try:
+        gmis.luby_coloring(edges, colors=2, rounds_per_color=1).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        edges.unpersist()
+    jobs = sc.statusTracker().getJobIdsForGroup("luby-job-count")
+    assert len(jobs) <= 30
