@@ -723,12 +723,11 @@ def independent_cascade_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     directed sampled supplier graph: each edge fires with p = 0.30
     via the replayable h60 coin, and by the live-edge equivalence the
     cascade is EXACTLY multi-seed BFS on the percolated subgraph — so
-    one deterministic simulation run is a keyed-join frontier loop
+    one deterministic simulation run is one static hop-bounded search
     (graph/closure.py bfs_rounds), not a Monte-Carlo ensemble.
     Returns activations per round (round 0 = seeds). The percolation
-    coin is a scan-side filter; each of the 4 rounds is one
-    frontier-edge join + one anti-join merge — the same shape at any
-    scale, frontier-bounded."""
+    coin is a scan-side filter; each of the 4 rounds is one level of
+    the search: one edge join + one min-merge."""
     from social_link_prediction_spark.graph.closure import bfs_rounds
 
     sup = tg.supplier_nodes(_t(spark, sf_dir, "supplier"))

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from social_link_prediction_spark.graph.paths import _search
+
 
 def transitive_closure(
     parent_edges: DataFrame,
@@ -151,30 +153,12 @@ def bfs_rounds(
 ) -> DataFrame:
     """Earliest-activation rounds of a multi-seed BFS: (id, round)
     with round 0 = seed, round r = first reached in r hops (within
-    ``max_rounds``). The collective-frontier twin of the per-source
-    ``multi_source_shortest_paths`` — one frontier for ALL seeds, so
-    an independent-cascade / reachability job is max_rounds keyed
-    joins + min-merges regardless of seed count. Per round the
-    frontier joins the edge list, subtracts already-activated nodes
-    (one merge agg), and is checkpointed."""
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).persist()
-    act = seeds.select(
-        F.col("id").cast("long").alias("id"),
-        F.lit(0).cast("int").alias("round"),
-    ).localCheckpoint()
-    frontier = act
-    for r in range(1, max_rounds + 1):
-        nxt = (
-            e.join(frontier.withColumnRenamed("id", "u"), "u")
-            .select(F.col("v").alias("id"))
-            .distinct()
-            .join(act.select("id"), "id", "left_anti")
-            .select("id", F.lit(r).cast("int").alias("round"))
-            .localCheckpoint()
-        )
-        if nxt.isEmpty():
-            break
-        act = act.unionByName(nxt).localCheckpoint()
-        frontier = nxt
-    e.unpersist()
-    return act
+    ``max_rounds``), one row per node. The hop-bounded search of
+    ``paths.multi_source_shortest_paths`` with ALL seeds under one
+    source key, so an independent-cascade / reachability job is one
+    static plan of max_rounds keyed joins + min-merges regardless of
+    seed count."""
+    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    start = seeds.select(F.lit(0).alias("source"), F.col("id").cast("long").alias("id"))
+    best = _search(e, start, None, max_rounds)
+    return best.select("id", F.col("dist").cast("int").alias("round"))

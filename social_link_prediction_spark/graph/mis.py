@@ -42,10 +42,14 @@ def _prio(col: str, r: int):
 
 
 def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
-    """(u, v) in both orientations, self-loops and NULL endpoints
-    dropped, checkpointed: every round reads it."""
+    """(u, v) in both orientations, once each, self-loops and NULL
+    endpoints dropped, checkpointed: every round reads it."""
+    # least/greatest skip a NULL, so a NULL endpoint turns into a
+    # self-loop and is filtered with them
     pairs = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        edges.select(
+            F.least(src, dst).alias("u"), F.greatest(src, dst).alias("v")
+        )
         .filter(F.col("u") != F.col("v"))
         .dropDuplicates()
     )

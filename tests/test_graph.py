@@ -91,27 +91,66 @@ def _weighted_graph(spark, seed=5, n=24, m=60):
     )
 
 
+def _hop_relaxation(und, sources, max_hops):
+    """Pure-Python hop-bounded search: Bellman-Ford rounds from every
+    source, where round h relaxes the out-edges of the nodes improved in
+    round h-1, each (source, node) takes its smallest (dist, parent)
+    candidate, and that candidate replaces the best entry only on a
+    strictly smaller dist (the first round to reach a distance keeps
+    it). Returns {(source, id): (dist, parent)}."""
+    adj = {}
+    for u, v, w in und:
+        adj.setdefault(u, []).append((v, w))
+    best = {(s, s): (0.0, None) for s in sources}
+    frontier = dict(best)
+    for _ in range(max_hops):
+        cand = {}
+        for (s, u), (d, _) in frontier.items():
+            for v, w in adj.get(u, ()):
+                c = (d + w, u)
+                if (s, v) not in cand or c < cand[(s, v)]:
+                    cand[(s, v)] = c
+        frontier = {k: c for k, c in cand.items() if k not in best or c[0] < best[k][0]}
+        best.update(frontier)
+    return best
+
+
+def _chase(best, source, target, steps):
+    """(dist, path) from at most ``steps`` parent-pointer steps back from
+    ``target``; (None, None) when the search never reached it."""
+    if (source, target) not in best:
+        return None, None
+    dist, parent = best[(source, target)]
+    path = [target]
+    for _ in range(steps):
+        if parent is None:
+            break
+        path.insert(0, parent)
+        parent = best[(source, parent)][1]
+    return dist, path
+
+
 @pytest.mark.parametrize("max_hops", [1, 2, 3, 4, 6, 8])
 def test_static_weighted_search_matches_dynamic_loop(spark, max_hops):
-    """The static unrolled search equals the pruned dynamic loop row for
-    row, parent tie-break included, and weighted pair_shortest_paths
-    (which runs the static plan) equals reconstruct_paths over the
-    dynamic table."""
+    """The search equals a pure-Python hop-bounded relaxation row for
+    row, parent tie-break included, and weighted pair_shortest_paths and
+    reconstruct_paths both return the paths that chasing those parent
+    pointers max_hops + 1 steps gives."""
     from social_link_prediction_spark.graph.build import undirected
 
     e = _weighted_graph(spark)
     sources = spark.createDataFrame([(0,), (3,), (7,)], "source bigint")
-    dyn = gp.multi_source_shortest_paths(e, sources, "weight", max_hops)
-    static = gp._bfs_static(undirected(e), sources, max_hops, "weight")
+    und = [(r.src, r.dst, r.weight) for r in undirected(e).collect()]
+    ref = _hop_relaxation(und, [0, 3, 7], max_hops)
+    ref_rows = sorted((s, v, d, p) for (s, v), (d, p) in ref.items())
+    got_best = gp.multi_source_shortest_paths(e, sources, "weight", max_hops)
     cols = ["source", "id", "dist", "parent"]
-    dyn_rows = sorted(tuple(r) for r in dyn.select(cols).collect())
-    assert sorted(tuple(r) for r in static.select(cols).collect()) == dyn_rows
+    assert sorted(tuple(r) for r in got_best.select(cols).collect()) == ref_rows
     if max_hops >= 2:
-        assert any(math.isinf(r[2]) for r in dyn_rows)
+        assert any(math.isinf(r[2]) for r in ref_rows)
         # some node has two parents at its best distance: the tie-break
         # is exercised, not vacuous
-        best = {(r[0], r[1]): r[2] for r in dyn_rows}
-        und = [(r.src, r.dst, r.weight) for r in undirected(e).collect()]
+        best = {(r[0], r[1]): r[2] for r in ref_rows}
         assert any(
             len({u for u, x, w in und if x == v and best.get((s, u), d) + w == d}) > 1
             for (s, v), d in best.items()
@@ -122,15 +161,17 @@ def test_static_weighted_search_matches_dynamic_loop(spark, max_hops):
         [(0, t) for t in range(24)] + [(7, t) for t in (3, 7, 11)], "src bigint, dst bigint"
     )
     targets = pairs.selectExpr("src AS source", "dst AS id")
+    expected = {(s, t): _chase(ref, s, t, max_hops + 1) for s, t in pairs.collect()}
     rec = {
         (r.source, r.id): (r.dist, r.path)
-        for r in gp.reconstruct_paths(dyn, targets, max_hops).collect()
+        for r in gp.reconstruct_paths(got_best, targets, max_hops).collect()
     }
+    assert rec == {k: v for k, v in expected.items() if v[0] is not None}
     got = {
         (r.src, r.dst): (r.dist, r.path)
         for r in gp.pair_shortest_paths(e, pairs, "weight", max_hops).collect()
     }
-    assert got == {k: rec.get(k, (None, None)) for k in got}
+    assert got == expected
     assert len(got) == 27
     if max_hops > 4:
         # the deep budgets are exercised: some best path is longer than 4 hops
@@ -1006,6 +1047,70 @@ def test_mis_and_coloring_degenerate_inputs(spark, edges, coloring, mis):
     assert all(r.color in (0, None) for r in one)
     with pytest.raises(ValueError):
         gmis.luby_coloring(e, colors=2, rounds_per_color=0)
+
+
+# Degenerate inputs for the path operators, with the outputs pinned: an
+# empty edge set, a single self-loop, duplicate plus reversed edges, two
+# components, and edges with a NULL endpoint (dropped, never a reached
+# NULL node). Every search starts at node 1; bfs_rounds gets seed 1
+# twice and still returns it once. Per input: the hop distance of each
+# node reached from 1, and the double-sweep row (None: the edge list is
+# empty and the sweep raises).
+_PATH_DEGENERATE = [
+    ([], {1: 0}, None),
+    ([(1, 1)], {1: 0}, (1, 1, 0, 0)),
+    ([(1, 2), (1, 2), (2, 1)], {1: 0, 2: 1}, (1, 2, 1, 1)),
+    ([(1, 2), (2, 1), (3, 4)], {1: 0, 2: 1}, (1, 2, 1, 1)),
+    ([(1, 2), (2, None), (None, 3)], {1: 0, 2: 1}, (1, 2, 1, 0)),
+]
+
+
+@pytest.mark.parametrize("edges,hops,sweep", _PATH_DEGENERATE)
+def test_path_operators_degenerate_inputs(spark, edges, hops, sweep):
+    from social_link_prediction_spark.graph.closure import bfs_rounds
+
+    e = spark.createDataFrame(edges, "src long, dst long")
+    sources = spark.createDataFrame([(1,)], "source long")
+    path = {1: [1], 2: [1, 2]}
+    best = gp.multi_source_shortest_paths(e, sources, max_hops=3)
+    assert {r.id: (r.source, r.dist, r.parent) for r in best.collect()} == {
+        v: (1, float(h), 1 if h else None) for v, h in hops.items()
+    }
+    targets = spark.createDataFrame([(1, 1), (1, 2), (1, 3)], "source long, id long")
+    rec = {r.id: (r.dist, r.path) for r in gp.reconstruct_paths(best, targets, 3).collect()}
+    assert rec == {v: (float(h), path[v]) for v, h in hops.items()}
+    pairs = targets.selectExpr("source AS src", "id AS dst")
+    unit = {r.dst: (r.dist, r.path) for r in gp.pair_shortest_paths(e, pairs, max_hops=3).collect()}
+    assert unit == {d: rec.get(d, (None, None)) for d in (1, 2, 3)}
+    we = e.withColumn("weight", F.lit(2.0))
+    weighted = {
+        r.dst: (r.dist, r.path)
+        for r in gp.pair_shortest_paths(we, pairs, "weight", max_hops=3).collect()
+    }
+    assert weighted == {
+        d: (2 * rec[d][0], rec[d][1]) if d in rec else (None, None) for d in (1, 2, 3)
+    }
+    assert {r.id: r.hop for r in gp.ego_network(e, [1], k=2).collect()} == hops
+    seeds = spark.createDataFrame([(1,), (1,)], "id long")
+    assert sorted(tuple(r) for r in bfs_rounds(e, seeds, max_rounds=3).collect()) == sorted(
+        hops.items()
+    )
+    hc = {r.id: r.harmonic for r in gp.harmonic_centrality(e, sources, max_hops=2).collect()}
+    assert hc == {v: 1.0 / h for v, h in hops.items() if h}
+    if sweep is None:
+        with pytest.raises(ValueError, match="empty"):
+            gp.double_sweep_diameter(e, max_hops=3)
+    else:
+        assert tuple(gp.double_sweep_diameter(e, max_hops=3).first()) == sweep
+
+
+def test_mis_symmetric_edges_once_per_orientation(spark):
+    # an input that lists both orientations keeps each directed edge once
+    from social_link_prediction_spark.graph import mis as gmis
+
+    e = spark.createDataFrame([(1, 2), (2, 1), (2, 3), (3, 2)], "src long, dst long")
+    rows = sorted(tuple(r) for r in gmis._undirected(e, "src", "dst").collect())
+    assert rows == [(1, 2), (2, 1), (2, 3), (3, 2)]
 
 
 def test_label_spreading_harmonic_properties(spark):

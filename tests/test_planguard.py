@@ -468,3 +468,48 @@ def test_luby_coloring_job_count(spark):
         edges.unpersist()
     jobs = sc.statusTracker().getJobIdsForGroup("luby-job-count")
     assert len(jobs) <= 30
+
+
+def test_decorated_path_search_job_count(spark):
+    """decorated_path_s1's shape: a 3-hop unit-weight search from one
+    source over an integer part-supplier graph (both orientations), a
+    target picked from the searched table, and its path reconstructed.
+    Per-job overhead sets its cost on small graphs, so the job count is
+    the guard: the unrolled search and reconstruct run 14 jobs,
+    collect included; a per-hop loop with a count and a checkpoint job per
+    hop ran 43."""
+    from pyspark.sql import functions as F
+
+    from social_link_prediction_spark.graph import paths as gp
+
+    sc = spark.sparkContext
+    # 400 parts (ids -1..-400), each supplied by three of 20 suppliers
+    fwd = (
+        spark.range(400)
+        .select(
+            (-F.col("id") - 1).alias("src"),
+            F.explode(F.array(*[F.col("id") * k % 20 + 1 for k in (1, 7, 13)])).alias("dst"),
+        )
+        .dropDuplicates()
+    )
+    edges = fwd.unionAll(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    edges = edges.withColumn("w", F.lit(1.0)).persist()
+    edges.count()
+    sc.setJobGroup("decorated-job-count", "decorated_path search job count")
+    try:
+        sources = spark.createDataFrame([(2,)], "source long")
+        best = gp.multi_source_shortest_paths(edges, sources, weight="w", max_hops=3, directed=True)
+        target = (
+            best.filter((F.col("dist") == 3.0) & (F.col("id") < 0))
+            .agg(F.max("id").alias("id"))
+            .filter(F.col("id").isNotNull())
+        )
+        targets = target.select(F.lit(2).cast("long").alias("source"), "id")
+        rows = gp.reconstruct_paths(best, targets, max_hops=3).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        edges.unpersist()
+    assert [len(r.path) for r in rows] == [4]
+    jobs = sc.statusTracker().getJobIdsForGroup("decorated-job-count")
+    assert len(jobs) <= 20
