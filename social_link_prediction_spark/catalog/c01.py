@@ -1366,12 +1366,13 @@ def clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Local clustering coefficient 2T(v)/(deg(v)(deg(v)-1)) — the
     metric the triangle census exists for; top 20."""
     from social_link_prediction_spark.graph import motifs as gm
+    from social_link_prediction_spark.graph.build import simple_edges
 
     e = _tri_edges(spark, sf_dir)
-    und = gm._oriented(e, "src", "dst")
+    und = simple_edges(e)
     deg = (
-        und.select(F.col("a").alias("id"))
-        .unionAll(und.select(F.col("b").alias("id")))
+        und.select(F.col("src").alias("id"))
+        .unionAll(und.select(F.col("dst").alias("id")))
         .groupBy("id")
         .agg(F.count(F.lit(1)).alias("deg"))
     )

@@ -2710,7 +2710,7 @@ def triangle_doulion(spark: SparkSession, sf_dir: str) -> DataFrame:
     the h60 evaluation from 0.5M edges to 3x23M triangle corners and
     is ~60% SLOWER at sf0.1; the sparsified second join costs only
     ~p^2 of the exact one.)"""
-    from social_link_prediction_spark.graph import motifs as gm
+    from social_link_prediction_spark.graph.build import simple_edges
 
     # r9 optimization: one edge-iterator pass counts BOTH censuses.
     # The old shape enumerated triangles twice (gm.triangles on the
@@ -2723,7 +2723,7 @@ def triangle_doulion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # edges only — the same integers the enumerations counted, with
     # no wedge materialization at all (guide §2.3/§2.4). Measured
     # 8.3x on the bench entry; values bit-identical at sf0.01/sf0.1.
-    e = gm._oriented(_tri_edges(spark, sf_dir), "src", "dst").persist()
+    e = simple_edges(_tri_edges(spark, sf_dir)).toDF("a", "b").persist()
     ec = e.withColumn(
         "s",
         mls.hash60(F.format_string("%d-%d", "a", "b"), F.lit("dln")) % 100 < 50,

@@ -8,5 +8,8 @@ graph_repo.py:12-63). ``iterate.py`` holds the row-count broadcast
 guard, the |V|-tracking partition count and the propagation step
 (score frame ⋈ edges, summed by the other endpoint) that the
 power-iteration operators share; ``build.vertices`` is the vertex set
-of an edge list.
+of an edge list. ``build.simple_edges`` is the one owner of the
+undirected simple-edge policy (src < dst, no self-loops, no NULL
+endpoints, each pair once); compose it with ``build.undirected`` for
+both orientations.
 """

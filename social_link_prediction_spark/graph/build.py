@@ -105,6 +105,23 @@ def edge_weights(
     return e.select("src", "dst", "rel", weight.alias("weight"))
 
 
+def simple_edges(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+    """The undirected simple graph of an edge list, as (src, dst) with
+    src < dst: each unordered pair once, no self-loops, no NULL
+    endpoint (the reference drops reverse edges before it builds the
+    graph, transformer.py step D5). Lazy; compose with ``undirected``
+    for both orientations."""
+    # least/greatest skip a NULL, so a NULL endpoint turns into a
+    # self-loop and is filtered with them
+    return (
+        edges.select(
+            F.least(src, dst).alias("src"), F.greatest(src, dst).alias("dst")
+        )
+        .filter(F.col("src") != F.col("dst"))
+        .dropDuplicates()
+    )
+
+
 def undirected(edges: DataFrame) -> DataFrame:
     """Both-orientation view for undirected traversal (the reference's
     Dijkstra runs with mode='all' over the directed graph)."""

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from social_link_prediction_spark.graph.build import simple_edges, undirected
+
 
 def label_propagation(
     edges: DataFrame,
@@ -39,14 +41,7 @@ def label_propagation(
     on bipartite-ish structures (the documented failure mode of the
     sync variant); 3-5 rounds is the standard operating range.
     """
-    pairs = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .dropDuplicates()
-    )
-    und = pairs.unionAll(
-        pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint()
+    und = undirected(simple_edges(edges, src, dst)).toDF("u", "v").localCheckpoint()
     labels = (
         und.select(F.col("u").alias("id"))
         .dropDuplicates()

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from social_link_prediction_spark.graph.build import simple_edges
 from social_link_prediction_spark.ml.linksplit import hash60
 
 
@@ -38,14 +39,7 @@ def maximal_matching(
     anti-joining endpoints)."""
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    live = (
-        edges.select(
-            F.least(src, dst).alias("u"), F.greatest(src, dst).alias("v")
-        )
-        .filter(F.col("u") != F.col("v"))
-        .dropDuplicates()
-        .localCheckpoint()
-    )
+    live = simple_edges(edges, src, dst).toDF("u", "v").localCheckpoint()
     out: DataFrame | None = None
     for r in range(rounds):
         keyed = live.withColumn(
@@ -99,10 +93,12 @@ def contract_matching(
     min endpoint as super-node, rewrite edges through the mapping,
     drop collapsed self-loops, and sum multiplicities into a weight —
     the contraction METIS-style partitioners alternate with matching.
-    Returns (src, dst, weight) with src < v canonicalized."""
+    Returns (src, dst, weight) with src < dst canonicalized."""
     mapping = matching.select(
         F.col("u").alias("node"), F.col("u").alias("super")
     ).unionAll(matching.select(F.col("v").alias("node"), F.col("u").alias("super")))
+    # not build.simple_edges: parallel edges are the multiplicity the
+    # weight sums, so this canonicalization must not deduplicate
     e = edges.select(
         F.least(src, dst).alias("u"), F.greatest(src, dst).alias("v")
     ).filter(F.col("u") != F.col("v"))

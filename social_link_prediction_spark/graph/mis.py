@@ -32,6 +32,7 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from social_link_prediction_spark.graph.build import simple_edges, undirected
 from social_link_prediction_spark.ml.linksplit import hash60
 
 
@@ -39,23 +40,6 @@ from social_link_prediction_spark.ml.linksplit import hash60
 # computed where it is read instead of joined in from a priority frame
 def _prio(col: str, r: int):
     return hash60(F.col(col).cast("string"), F.lit(f"mis{r}"))
-
-
-def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
-    """(u, v) in both orientations, once each, self-loops and NULL
-    endpoints dropped, checkpointed: every round reads it."""
-    # least/greatest skip a NULL, so a NULL endpoint turns into a
-    # self-loop and is filtered with them
-    pairs = (
-        edges.select(
-            F.least(src, dst).alias("u"), F.greatest(src, dst).alias("v")
-        )
-        .filter(F.col("u") != F.col("v"))
-        .dropDuplicates()
-    )
-    return pairs.unionAll(
-        pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint()
 
 
 def _endpoints(und: DataFrame) -> DataFrame:
@@ -115,7 +99,7 @@ def maximal_independent_set(
     endpoints, consistent with the other graph operators here)."""
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    und = _undirected(edges, src, dst)
+    und = undirected(simple_edges(edges, src, dst)).toDF("u", "v").localCheckpoint()
     won, lost, active = _luby(und, _endpoints(und), rounds, settle_last=True)
     return _union(
         [w.withColumn("status", F.lit("mis")) for w in won]
@@ -155,7 +139,7 @@ def luby_coloring(
         raise ValueError("colors must be >= 1")
     if rounds_per_color < 1:
         raise ValueError("rounds must be >= 1")
-    und = _undirected(edges, src, dst)
+    und = undirected(simple_edges(edges, src, dst)).toDF("u", "v").localCheckpoint()
     active = _endpoints(und)
     out: list[DataFrame] = []
     for c in range(colors):

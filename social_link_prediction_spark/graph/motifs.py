@@ -21,27 +21,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from social_link_prediction_spark.graph import iterate
-from social_link_prediction_spark.graph.build import vertices
-
-
-def _oriented(edges: DataFrame, src: str, dst: str) -> DataFrame:
-    """Distinct low→high orientation of an undirected edge list
-    (self-loops dropped — they can't be in a triangle)."""
-    return (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .dropDuplicates()
-    )
+from social_link_prediction_spark.graph.build import simple_edges, undirected, vertices
 
 
 def triangles(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     """All triangles as (a, b, c) rows with a < b < c, each exactly
     once. Two shuffles: the wedge join on the middle vertex and the
     closing join on (a, c)."""
-    return _triangles_oriented(_oriented(edges, src, dst))
+    return _triangles_oriented(simple_edges(edges, src, dst).toDF("a", "b"))
 
 
 def _triangles_oriented(e: DataFrame) -> DataFrame:
@@ -112,7 +99,7 @@ def triangle_count(
     enumeration past ``_ADJ_MAX_NODES``, so a production-scale edge
     table degrades to the shuffle path instead of hitting the 8 GB
     broadcast cap; False = always take the wedge path."""
-    e = _oriented(edges, src, dst)
+    e = simple_edges(edges, src, dst).toDF("a", "b")
     use_adj = bounded_nodes
     if use_adj is None:
         use_adj = _nodes_bounded(e, _ADJ_MAX_NODES)
@@ -120,8 +107,9 @@ def triangle_count(
         tri = _triangles_oriented(e)
         return tri.agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
     withm = _oriented_adjacency(e)
+    # sum over no edges is NULL; an edge-free graph has 0 triangles
     return withm.agg(
-        F.sum(F.size(F.array_intersect("o", "i")))
+        F.coalesce(F.sum(F.size(F.array_intersect("o", "i"))), F.lit(0))
         .cast("long")
         .alias("n_triangles")
     )
@@ -149,7 +137,7 @@ def vertex_triangle_counts(
     past ``_ADJ_MAX_NODES`` (or with False) the counts come from
     exploding the wedge-join enumeration's corners instead of the
     broadcast adjacency device; identical integers either way."""
-    e = _oriented(edges, src, dst)
+    e = simple_edges(edges, src, dst).toDF("a", "b")
     use_adj = bounded_nodes
     if use_adj is None:
         use_adj = _nodes_bounded(e, _ADJ_MAX_NODES)
@@ -195,8 +183,7 @@ def degree_assortativity(
     (symmetrizing makes the correlation orientation-free). One corr
     aggregate after two degree joins — broadcast when the degree table
     is small, shuffled joins otherwise (Catalyst/AQE decides)."""
-    e = _oriented(edges, src, dst)
-    und2 = e.unionAll(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
+    und2 = undirected(simple_edges(edges, src, dst)).toDF("a", "b")
     deg = und2.groupBy(F.col("a").alias("id")).agg(F.count(F.lit(1)).alias("deg"))
     da = deg.select(F.col("id").alias("a"), F.col("deg").alias("da"))
     db = deg.select(F.col("id").alias("b"), F.col("deg").alias("db"))
@@ -230,11 +217,7 @@ def k_core(
     as the standard cohesion peel for social graphs, and because
     peeling is the canonical iterative-shrink join pattern at scale.
     """
-    e = (
-        _oriented(edges, src, dst)
-        .select(F.col("a").alias("u"), F.col("b").alias("v"))
-        .localCheckpoint()
-    )
+    e = simple_edges(edges, src, dst).toDF("u", "v").localCheckpoint()
     prev_edges = e.count()
     for _ in range(max_rounds):
         deg = (

@@ -47,6 +47,7 @@ def boruvka_mst(
     round. The edge list is checkpointed once and re-joined per
     round; crossing edges strictly shrink as components merge.
     """
+    # not build.simple_edges: each orientation keeps its own weight row
     e = (
         edges.select(
             F.col(src).alias("u"), F.col(dst).alias("v"), F.col(weight).alias("w")

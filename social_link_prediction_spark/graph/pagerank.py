@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from social_link_prediction_spark.graph import iterate
-from social_link_prediction_spark.graph.build import vertices
+from social_link_prediction_spark.graph.build import simple_edges, vertices
 
 
 def _setup(edges: DataFrame, src: str, dst: str):
@@ -245,10 +245,12 @@ def connected_components(
     Each round is two shuffles (one groupBy per star op) plus one cheap
     convergence aggregate. Returns (id, component) where component =
     min node id reachable, for every id appearing in the edge list.
+    Edges with a NULL endpoint are dropped; a node whose only edge is
+    a self-loop is its own component.
     """
-    pairs = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    pairs = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).dropna()
     nodes = vertices(pairs, "u", "v").localCheckpoint()
-    e = pairs.filter(F.col("u") != F.col("v")).dropDuplicates().localCheckpoint()
+    e = simple_edges(pairs, "u", "v").toDF("u", "v").localCheckpoint()
     prev_sig = None
     for _ in range(max_iterations):
         # large-star: each node u attaches its strictly-larger
@@ -263,13 +265,12 @@ def connected_components(
             .filter(F.col("u") != F.col("v"))
             .dropDuplicates()
         )
-        # small-star: orient big→small, then each node attaches all its
-        # smaller neighbors (and itself) to the min of that set
-        canon = large.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        mins2 = canon.groupBy("u").agg(F.min("v").alias("mn"))
-        joined = canon.join(mins2, "u")
+        # small-star: each node attaches all its smaller neighbors (and
+        # itself) to the min of that set. large is already oriented
+        # big→small: its u is a neighbor above the old u, its v at most
+        # the old u
+        mins2 = large.groupBy("u").agg(F.min("v").alias("mn"))
+        joined = large.join(mins2, "u")
         small = (
             joined.select(F.col("v").alias("u"), F.col("mn").alias("v"))
             .unionAll(joined.select("u", F.col("mn").alias("v")))

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from social_link_prediction_spark.graph.build import undirected
+from social_link_prediction_spark.graph.build import simple_edges, undirected
 from social_link_prediction_spark.graph.iterate import hint
 
 
@@ -566,20 +566,13 @@ def six_degrees_experiment(
     # just burn one more eager job on the same rows)
     if edges.storageLevel == StorageLevel.NONE:
         edges = edges.localCheckpoint()
-    # BFS traverses undirected(bfs_edges): canonicalizing to one row
-    # per unordered pair halves every level-join's build side while
-    # undirected() reconstructs the IDENTICAL adjacency set (and
-    # identical min-parent candidates) — distances cannot change.
-    # mean-k / degree_sum keep the caller's original edge view.
+    # BFS traverses undirected(bfs_edges): one row per unordered pair
+    # halves every level-join's build side while undirected()
+    # reconstructs the IDENTICAL adjacency set (and identical
+    # min-parent candidates) minus self-loops — distances cannot
+    # change. mean-k / degree_sum keep the caller's original edge view.
     if weight is None:
-        bfs_edges = (
-            edges.select(
-                F.least("src", "dst").alias("src"),
-                F.greatest("src", "dst").alias("dst"),
-            )
-            .dropDuplicates()
-            .localCheckpoint()
-        )
+        bfs_edges = simple_edges(edges).localCheckpoint()
     else:  # weighted relaxation needs the per-edge weight rows as-is
         bfs_edges = edges
     ids = vertices.select("id")

@@ -36,6 +36,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from social_link_prediction_spark.graph.build import simple_edges, undirected
 from social_link_prediction_spark.graph.iterate import hint
 
 
@@ -111,14 +112,7 @@ def label_spreading(
     for oracle replay. Per round: one keyed join + one mean-aggregate
     over the undirected edge list, then the seed clamp — the same
     loop discipline as pagerank, with the score frame |V|-sized."""
-    pairs = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .dropDuplicates()
-    )
-    und = pairs.unionAll(
-        pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint()
+    und = undirected(simple_edges(edges, src, dst)).toDF("u", "v").localCheckpoint()
     nodes = und.select(F.col("u").alias("id")).dropDuplicates()
     sd = seeds.select(
         F.col(id_col).alias("id"), F.col(label_col).cast("double").alias("seed")

@@ -64,6 +64,7 @@ def strongly_connected_components(
     """
     if rounds < 1 or peels < 1:
         raise ValueError("rounds and peels must be >= 1")
+    # not build.simple_edges: the graph is directed, (u, v) != (v, u)
     e = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .filter(F.col("u") != F.col("v"))

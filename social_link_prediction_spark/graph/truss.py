@@ -31,16 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _canonical(edges: DataFrame, src: str, dst: str) -> DataFrame:
-    return (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("src"),
-            F.greatest(F.col(src), F.col(dst)).alias("dst"),
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .dropDuplicates()
-    )
+from social_link_prediction_spark.graph.build import simple_edges
 
 
 def edge_support(e: DataFrame) -> DataFrame:
@@ -74,7 +65,7 @@ def ktruss(
     (src, dst, support)."""
     if k < 3:
         raise ValueError(f"k-truss requires k >= 3, got {k}")
-    e = _canonical(edges, src, dst).persist()
+    e = simple_edges(edges, src, dst).persist()
     n = e.count()
     sup = None
     converged = False

@@ -334,7 +334,7 @@ def test_triangle_bounded_node_guard_falls_back(spark, monkeypatch):
     )
     # shrink the cap so the 4-node K4 counts as "unbounded"
     monkeypatch.setattr(gm, "_ADJ_MAX_NODES", 3)
-    assert not gm._nodes_bounded(gm._oriented(edges, "src", "dst"), 3)
+    assert not gm._nodes_bounded(gb.simple_edges(edges).toDF("a", "b"), 3)
     # probe path (None) and forced fallback (False) both take the wedge
     # path and agree with the vouched adjacency path (True)
     for flag in (None, False):
@@ -1105,12 +1105,101 @@ def test_path_operators_degenerate_inputs(spark, edges, hops, sweep):
 
 
 def test_mis_symmetric_edges_once_per_orientation(spark):
-    # an input that lists both orientations keeps each directed edge once
-    from social_link_prediction_spark.graph import mis as gmis
-
+    # an input that lists both orientations keeps each directed edge
+    # once in the symmetric view MIS and coloring read
     e = spark.createDataFrame([(1, 2), (2, 1), (2, 3), (3, 2)], "src long, dst long")
-    rows = sorted(tuple(r) for r in gmis._undirected(e, "src", "dst").collect())
+    rows = sorted(tuple(r) for r in gb.undirected(gb.simple_edges(e)).collect())
     assert rows == [(1, 2), (2, 1), (2, 3), (3, 2)]
+    # mixed orientations with string ids: each orientation once too
+    e = spark.createDataFrame(
+        [("p:1", "s:1"), ("s:1", "p:1"), ("s:1", "p:2"), ("p:2", "p:2")],
+        "src string, dst string",
+    )
+    rows = sorted(tuple(r) for r in gb.undirected(gb.simple_edges(e)).collect())
+    assert rows == [("p:1", "s:1"), ("p:2", "s:1"), ("s:1", "p:1"), ("s:1", "p:2")]
+
+
+# Degenerate inputs for the operators that read build.simple_edges (the
+# _MIS_DEGENERATE edge lists), with the outputs pinned. label_spreading
+# seeds 1 -> 1.0 and 4 -> 0.0. No input has a triangle, and every
+# matched edge contracts into one super-node, so those outputs are
+# empty throughout. degree_assortativity is NULL without edges and
+# raises under ANSI mode when every endpoint has the same degree.
+_ONE_EDGE = {
+    "lpa": {1: 1, 2: 2},
+    "spread": {1: (1.0, 1), 2: (1.0, 0)},
+    "mm": [(1, 2, 0)],
+    "kcore": {1: 1, 2: 1},
+    "cc": {1: 1, 2: 1},
+    "assort": "DIVIDE_BY_ZERO",
+}
+_NO_EDGE = {"lpa": {}, "spread": {}, "mm": [], "kcore": {}, "cc": {}, "assort": None}
+_SIMPLE_DEGENERATE = [
+    ([], _NO_EDGE),
+    ([(1, 1)], {**_NO_EDGE, "cc": {1: 1}}),
+    ([(1, 2), (1, 2), (2, 1)], _ONE_EDGE),
+    (
+        [(1, 2), (2, 1), (3, 4)],
+        {
+            "lpa": {1: 1, 2: 2, 3: 3, 4: 4},
+            "spread": {1: (1.0, 1), 2: (1.0, 0), 3: (0.0, 0), 4: (0.0, 1)},
+            "mm": [(1, 2, 0), (3, 4, 0)],
+            "kcore": {1: 1, 2: 1, 3: 1, 4: 1},
+            "cc": {1: 1, 2: 1, 3: 3, 4: 3},
+            "assort": "DIVIDE_BY_ZERO",
+        },
+    ),
+    ([(1, None), (None, 2), (None, None), (1, 2)], _ONE_EDGE),
+]
+
+
+@pytest.mark.parametrize("edges,want", _SIMPLE_DEGENERATE)
+def test_simple_edge_operators_degenerate_inputs(spark, edges, want):
+    from pyspark.errors import ArithmeticException
+
+    from social_link_prediction_spark.graph import communities as gcom
+    from social_link_prediction_spark.graph import matching as gmat
+    from social_link_prediction_spark.graph import motifs as gm
+    from social_link_prediction_spark.graph import propagate as gprop
+    from social_link_prediction_spark.graph import truss as gtruss
+
+    e = spark.createDataFrame(edges, "src long, dst long")
+    seeds = spark.createDataFrame([(1, 1.0), (4, 0.0)], "id long, label double")
+    lpa = gcom.label_propagation(e, rounds=2)
+    assert {r.id: r.label for r in lpa.collect()} == want["lpa"]
+    spread = gprop.label_spreading(e, seeds, rounds=2)
+    assert {r.id: (r.score, r.is_seed) for r in spread.collect()} == want["spread"]
+    m = gmat.maximal_matching(e, rounds=2)
+    assert sorted(tuple(r) for r in m.collect()) == want["mm"]
+    assert gmat.contract_matching(e, m).collect() == []
+    assert gm.triangles(e).collect() == []
+    assert gm.triangle_count(e).first().n_triangles == 0
+    assert gm.vertex_triangle_counts(e).collect() == []
+    assert gtruss.edge_support(gb.simple_edges(e)).collect() == []
+    assert gtruss.ktruss(e, k=3).collect() == []
+    assert {r.id: r.degree for r in gm.k_core(e, k=1).collect()} == want["kcore"]
+    assert {r.id: r.component for r in gpr.connected_components(e).collect()} == want["cc"]
+    if want["assort"] is None:
+        assert gm.degree_assortativity(e).first().assortativity is None
+    else:
+        with pytest.raises(ArithmeticException, match=want["assort"]):
+            gm.degree_assortativity(e).collect()
+
+
+def test_label_operators_count_each_neighbour_once(spark):
+    """Edges listed in both orientations next to edges listed once
+    weigh the same: both operators read the undirected simple graph."""
+    from social_link_prediction_spark.graph import communities as gcom
+    from social_link_prediction_spark.graph import propagate as gprop
+
+    e = spark.createDataFrame([(1, 2), (2, 1), (2, 3)], "src long, dst long")
+    seeds = spark.createDataFrame([(1, 1.0), (3, 0.0)], "id long, label double")
+    got = {r.id: r.score for r in gprop.label_spreading(e, seeds, rounds=1).collect()}
+    assert got == {1: 1.0, 2: 0.5, 3: 0.0}
+    # node 2 sees labels 1 and 3 once each and takes the smaller one
+    e = spark.createDataFrame([(1, 2), (2, 3), (3, 2)], "src long, dst long")
+    got = {r.id: r.label for r in gcom.label_propagation(e, rounds=1).collect()}
+    assert got == {1: 2, 2: 1, 3: 2}
 
 
 def test_label_spreading_harmonic_properties(spark):
