@@ -1124,7 +1124,11 @@ def test_mis_symmetric_edges_once_per_orientation(spark):
 # seeds 1 -> 1.0 and 4 -> 0.0. No input has a triangle, and every
 # matched edge contracts into one super-node, so those outputs are
 # empty throughout. degree_assortativity is NULL without edges and
-# raises under ANSI mode when every endpoint has the same degree.
+# raises under ANSI mode when every endpoint has the same degree. The
+# same inputs, read as directed edges, feed strongly_connected_components
+# (a node whose only edge is a self-loop gets no row), transitive_closure
+# as (child, parent) links (a row with a NULL endpoint stays a link) and
+# boruvka_mst with weight src + dst.
 _ONE_EDGE = {
     "lpa": {1: 1, 2: 2},
     "spread": {1: (1.0, 1), 2: (1.0, 0)},
@@ -1132,11 +1136,24 @@ _ONE_EDGE = {
     "kcore": {1: 1, 2: 1},
     "cc": {1: 1, 2: 1},
     "assort": "DIVIDE_BY_ZERO",
+    "scc": {1: 2, 2: 2},
+    "closure": [(1, 1, 2), (1, 2, 1), (2, 1, 1), (2, 2, 2)],
+    "mst": [(1, 2, 3)],
 }
-_NO_EDGE = {"lpa": {}, "spread": {}, "mm": [], "kcore": {}, "cc": {}, "assort": None}
+_NO_EDGE = {
+    "lpa": {},
+    "spread": {},
+    "mm": [],
+    "kcore": {},
+    "cc": {},
+    "assort": None,
+    "scc": {},
+    "closure": [],
+    "mst": [],
+}
 _SIMPLE_DEGENERATE = [
     ([], _NO_EDGE),
-    ([(1, 1)], {**_NO_EDGE, "cc": {1: 1}}),
+    ([(1, 1)], {**_NO_EDGE, "cc": {1: 1}, "closure": [(1, 1, 1)]}),
     ([(1, 2), (1, 2), (2, 1)], _ONE_EDGE),
     (
         [(1, 2), (2, 1), (3, 4)],
@@ -1147,9 +1164,19 @@ _SIMPLE_DEGENERATE = [
             "kcore": {1: 1, 2: 1, 3: 1, 4: 1},
             "cc": {1: 1, 2: 1, 3: 3, 4: 3},
             "assort": "DIVIDE_BY_ZERO",
+            "scc": {1: 2, 2: 2, 3: 3, 4: 4},
+            "closure": [(1, 1, 2), (1, 2, 1), (2, 1, 1), (2, 2, 2), (3, 4, 1)],
+            "mst": [(1, 2, 3), (3, 4, 7)],
         },
     ),
-    ([(1, None), (None, 2), (None, None), (1, 2)], _ONE_EDGE),
+    (
+        [(1, None), (None, 2), (None, None), (1, 2)],
+        {
+            **_ONE_EDGE,
+            "scc": {1: 1, 2: 2},
+            "closure": [(1, 2, 1), (1, None, 1), (None, 2, 1), (None, None, 1)],
+        },
+    ),
 ]
 
 
@@ -1157,11 +1184,17 @@ _SIMPLE_DEGENERATE = [
 def test_simple_edge_operators_degenerate_inputs(spark, edges, want):
     from pyspark.errors import ArithmeticException
 
+    from social_link_prediction_spark.graph import closure as gcl
     from social_link_prediction_spark.graph import communities as gcom
     from social_link_prediction_spark.graph import matching as gmat
     from social_link_prediction_spark.graph import motifs as gm
+    from social_link_prediction_spark.graph import mst as gmst
     from social_link_prediction_spark.graph import propagate as gprop
+    from social_link_prediction_spark.graph import scc as gscc
     from social_link_prediction_spark.graph import truss as gtruss
+
+    def rows(df):
+        return sorted((tuple(r) for r in df.collect()), key=repr)
 
     e = spark.createDataFrame(edges, "src long, dst long")
     seeds = spark.createDataFrame([(1, 1.0), (4, 0.0)], "id long, label double")
@@ -1184,6 +1217,30 @@ def test_simple_edge_operators_degenerate_inputs(spark, edges, want):
     else:
         with pytest.raises(ArithmeticException, match=want["assort"]):
             gm.degree_assortativity(e).collect()
+    scc = gscc.strongly_connected_components(e, rounds=3, peels=1)
+    assert {r.id: r.scc for r in scc.collect()} == want["scc"]
+    assert rows(gcl.transitive_closure(e.toDF("child", "parent"))) == want["closure"]
+    we = e.withColumn("w", F.col("src") + F.col("dst"))
+    assert rows(gmst.boruvka_mst(we, "src", "dst", "w")) == want["mst"]
+    if edges:
+        return
+    # Budget exhaustion, pinned once (on the empty case): each policy
+    # needs an input deeper than its round budget, not a degenerate one.
+    chain = spark.createDataFrame([(i, i + 1) for i in range(1, 5)], "src long, dst long")
+    with pytest.raises(RuntimeError, match="k_core did not reach a fixed point in 2 rounds"):
+        gm.k_core(chain, k=2, max_rounds=2)
+    # one peel round leaves (2,3) alone; its support is recomputed at the cap
+    tri = spark.createDataFrame([(1, 2), (1, 3), (2, 3), (2, 4), (3, 4)], "src long, dst long")
+    assert rows(gtruss.ktruss(tri, k=4, max_rounds=1)) == [(2, 3, 0)]
+    # a depth-8 chain 9 -> 8 -> ... -> 1 closes only its links of length <= 4
+    forest = spark.createDataFrame([(i + 1, i) for i in range(1, 9)], "child long, parent long")
+    capped = rows(gcl.transitive_closure(forest, max_depth=4))
+    assert capped == sorted((d, a, d - a) for d in range(2, 10) for a in range(1, d) if d - a <= 4)
+    # one large-star/small-star round on the path 0-1-...-8
+    path = spark.createDataFrame([(i, i + 1) for i in range(8)], "src long, dst long")
+    assert rows(gpr.connected_components(path, max_iterations=1)) == [
+        (0, 0), (1, 0), (2, 0), (3, 1), (4, 2), (5, 3), (6, 4), (7, 5), (8, 6)
+    ]
 
 
 def test_label_operators_count_each_neighbour_once(spark):

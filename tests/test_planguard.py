@@ -470,6 +470,46 @@ def test_luby_coloring_job_count(spark):
     assert len(jobs) <= 30
 
 
+def test_fixpoint_operator_job_counts(spark):
+    """Per-job overhead sets the cost of the bounded fixed-point
+    operators on small graphs, so each one's job count on a tiny input
+    is pinned exactly, collect included: one checkpoint and one change
+    test per round, and no job that the shared loop adds."""
+    from social_link_prediction_spark.graph import closure as gcl
+    from social_link_prediction_spark.graph import motifs as gm
+    from social_link_prediction_spark.graph import pagerank as gpr
+    from social_link_prediction_spark.graph import scc as gscc
+    from social_link_prediction_spark.graph import truss as gt
+
+    sc = spark.sparkContext
+
+    def jobs(group, run):
+        sc.setJobGroup(group, group)
+        try:
+            run().collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def edges(rows, schema="src long, dst long"):
+        return spark.createDataFrame(rows, schema)
+
+    two_cycles = edges([(5, 6), (6, 5), (1, 2), (2, 1), (6, 1)])
+    tail = edges([(1, 2), (2, 3), (1, 3), (3, 4), (4, 5)])
+    kite = edges([(1, 2), (1, 3), (2, 3), (2, 4), (3, 4)])
+    chain = edges([(i + 1, i) for i in range(1, 6)], "child long, parent long")
+    path = edges([(i, i + 1) for i in range(8)])
+    got = {
+        "scc": jobs("fp-scc", lambda: gscc.strongly_connected_components(two_cycles, 3, 2)),
+        "k_core": jobs("fp-kcore", lambda: gm.k_core(tail, k=2)),
+        "ktruss": jobs("fp-ktruss", lambda: gt.ktruss(kite, k=4)),
+        "closure": jobs("fp-closure", lambda: gcl.transitive_closure(chain)),
+        "cc": jobs("fp-cc", lambda: gpr.connected_components(path)),
+    }
+    assert got == {"scc": 139, "k_core": 30, "ktruss": 21, "closure": 33, "cc": 53}
+
+
 def test_decorated_path_search_job_count(spark):
     """decorated_path_s1's shape: a 3-hop unit-weight search from one
     source over an integer part-supplier graph (both orientations), a
