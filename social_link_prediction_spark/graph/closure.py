@@ -18,7 +18,8 @@ in one pass, built as unrolled/doubling iterative DataFrame plans:
   time constraint as a join filter.
 
 Both operators cut lineage per round with localCheckpoint (the same
-discipline as pagerank/katz/scc) so the unrolled plan never doubles.
+discipline as pagerank/katz/scc) so the unrolled plan never doubles;
+``transitive_closure`` runs its rounds through iterate.fixpoint.
 """
 
 from __future__ import annotations
@@ -26,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from social_link_prediction_spark.graph.iterate import fixpoint, measure_changed
 from social_link_prediction_spark.graph.paths import _search
 
 
@@ -45,9 +47,10 @@ def transitive_closure(
 
     Path doubling: L_0 = direct links (depth 1); L_{k+1} = L_k UNION
     (L_k JOIN L_k) — after round k every link of length <= 2^k is
-    present. ceil(log2(max_depth)) rounds bound the work; the loop
-    exits early as soon as a round adds no new pairs (one count per
-    round on the checkpointed frame, not an extra job).
+    present. ceil(log2(max_depth)) rounds bound the work;
+    iterate.fixpoint stops early as soon as a round adds no new pairs
+    (one count per round on the checkpointed frame). At the round cap
+    the links closed so far come back.
     """
     if max_depth < 1:
         raise ValueError(f"max_depth must be >= 1, got {max_depth}")
@@ -60,34 +63,23 @@ def transitive_closure(
         .dropDuplicates(["desc", "anc"])
         .localCheckpoint()
     )
-    n = links.count()
-    rounds = max(1, (max_depth - 1).bit_length())
-    for _ in range(rounds):
-        hops = (
-            links.alias("a")
-            .join(
-                links.select(
-                    F.col("desc").alias("anc"),
-                    F.col("anc").alias("anc2"),
-                    F.col("depth").alias("d2"),
-                ).alias("b"),
-                "anc",
-            )
-            .select(
-                F.col("desc"),
-                F.col("anc2").alias("anc"),
-                (F.col("depth") + F.col("d2")).alias("depth"),
-            )
+
+    def double(links: DataFrame) -> DataFrame:
+        up = links.select(
+            F.col("desc").alias("anc"), F.col("anc").alias("anc2"), F.col("depth").alias("d2")
         )
-        links = (
-            links.unionByName(hops)
-            .dropDuplicates(["desc", "anc"])
-            .localCheckpoint()
+        hops = links.join(up, "anc").select(
+            "desc", F.col("anc2").alias("anc"), (F.col("depth") + F.col("d2")).alias("depth")
         )
-        n2 = links.count()
-        if n2 == n:
-            break
-        n = n2
+        return links.unionByName(hops).dropDuplicates(["desc", "anc"])
+
+    links, _ = fixpoint(
+        links,
+        double,
+        measure_changed(DataFrame.count, links.count()),
+        max(1, (max_depth - 1).bit_length()),
+        "transitive_closure",
+    )
     return links
 
 

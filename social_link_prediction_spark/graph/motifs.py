@@ -210,35 +210,28 @@ def k_core(
     within-core degree. Each round is one degree aggregation plus two
     semi-joins (edge endpoint filters) — shuffle keys stay (src)/(dst)
     throughout, so AQE coalesces the survivors as the graph shrinks;
-    localCheckpoint per round truncates the growing lineage exactly
-    like the PageRank loop.
+    iterate.fixpoint checkpoints each round, which truncates the
+    growing lineage.
 
     Not in the reference (its analysis stops at degrees/wedges); added
     as the standard cohesion peel for social graphs, and because
     peeling is the canonical iterative-shrink join pattern at scale.
     """
     e = simple_edges(edges, src, dst).toDF("u", "v").localCheckpoint()
-    prev_edges = e.count()
-    for _ in range(max_rounds):
-        deg = (
-            e.select(F.col("u").alias("id"))
-            .unionAll(e.select(F.col("v").alias("id")))
-            .groupBy("id")
-            .agg(F.count(F.lit(1)).alias("degree"))
-        )
-        live = deg.filter(F.col("degree") >= k).select("id").localCheckpoint()
-        kept = (
+
+    def peel(e: DataFrame) -> DataFrame:
+        live = _degrees(e).filter(F.col("degree") >= k).select("id").localCheckpoint()
+        return (
             e.join(live.withColumnRenamed("id", "u"), "u", "left_semi")
             .join(live.withColumnRenamed("id", "v"), "v", "left_semi")
             .select("u", "v")
-            .localCheckpoint()
         )
-        n_after = kept.count()
-        e = kept
-        if n_after == prev_edges:
-            break
-        prev_edges = n_after
-    else:
+
+    # peeling only drops edges, so an unchanged edge count is the fixed point
+    e, settled = iterate.fixpoint(
+        e, peel, iterate.measure_changed(DataFrame.count, e.count()), max_rounds, "k_core"
+    )
+    if not settled:
         # Loudly refuse rather than silently return a non-core: the
         # final degree filter alone cannot repair an unconverged peel
         # (removing a <k vertex lowers its neighbors' degrees again).
@@ -247,10 +240,14 @@ def k_core(
             f"k_core did not reach a fixed point in {max_rounds} rounds; "
             f"raise max_rounds (peeling depth can reach O(|V|) on chains)"
         )
-    deg = (
+    return _degrees(e).filter(F.col("degree") >= k)
+
+
+def _degrees(e: DataFrame) -> DataFrame:
+    """(id, degree) over an undirected (u, v) edge list listed once."""
+    return (
         e.select(F.col("u").alias("id"))
         .unionAll(e.select(F.col("v").alias("id")))
         .groupBy("id")
         .agg(F.count(F.lit(1)).alias("degree"))
     )
-    return deg.filter(F.col("degree") >= k)

@@ -243,7 +243,9 @@ def connected_components(
     snapshots, where duplicate chains can be arbitrarily long.
 
     Each round is two shuffles (one groupBy per star op) plus one cheap
-    convergence aggregate. Returns (id, component) where component =
+    convergence aggregate; iterate.fixpoint runs the rounds and stops
+    when the edge-set signature repeats. At the round cap the labels
+    of the last round come back. Returns (id, component) where component =
     min node id reachable, for every id appearing in the edge list.
     Edges with a NULL endpoint are dropped; a node whose only edge is
     a self-loop is its own component.
@@ -251,44 +253,44 @@ def connected_components(
     pairs = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).dropna()
     nodes = vertices(pairs, "u", "v").localCheckpoint()
     e = simple_edges(pairs, "u", "v").toDF("u", "v").localCheckpoint()
-    prev_sig = None
-    for _ in range(max_iterations):
-        # large-star: each node u attaches its strictly-larger
-        # neighbors to m = min(N(u) ∪ {u}); every undirected edge is
-        # emitted once, from its smaller endpoint's group
-        nbrs = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = nbrs.groupBy("u").agg(F.min("v").alias("mn"))
-        large = (
-            nbrs.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.least("mn", F.col("u")).alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .dropDuplicates()
-        )
-        # small-star: each node attaches all its smaller neighbors (and
-        # itself) to the min of that set. large is already oriented
-        # big→small: its u is a neighbor above the old u, its v at most
-        # the old u
-        mins2 = large.groupBy("u").agg(F.min("v").alias("mn"))
-        joined = large.join(mins2, "u")
-        small = (
-            joined.select(F.col("v").alias("u"), F.col("mn").alias("v"))
-            .unionAll(joined.select("u", F.col("mn").alias("v")))
-            .filter(F.col("u") != F.col("v"))
-            .dropDuplicates()
-            .localCheckpoint()
-        )
-        # type-agnostic edge-set signature (ids may be strings);
-        # bit_xor can't overflow under ANSI mode, unlike sum
-        sig = small.agg(
-            F.count(F.lit(1)), F.bit_xor(F.xxhash64("u", "v"))
-        ).collect()[0]
-        e = small
-        if prev_sig is not None and tuple(sig) == tuple(prev_sig):
-            break
-        prev_sig = sig
+    changed = iterate.measure_changed(_edge_signature)
+    e, _ = iterate.fixpoint(e, _star_round, changed, max_iterations, "connected_components")
     # at the fixed point e is a star forest: u → component root (min id);
     # the groupBy(min) is belt-and-braces against a signature collision
     labels = e.groupBy(F.col("u").alias("id")).agg(F.min("v").alias("component"))
     roots = nodes.join(labels, "id", "left_anti").withColumn("component", F.col("id"))
     return labels.unionByName(roots)
+
+
+def _star_round(e: DataFrame) -> DataFrame:
+    """One large-star then one small-star pass over (u, v) edges."""
+    # large-star: each node u attaches its strictly-larger
+    # neighbors to m = min(N(u) ∪ {u}); every undirected edge is
+    # emitted once, from its smaller endpoint's group
+    nbrs = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    mins = nbrs.groupBy("u").agg(F.min("v").alias("mn"))
+    large = (
+        nbrs.join(mins, "u")
+        .filter(F.col("v") > F.col("u"))
+        .select(F.col("v").alias("u"), F.least("mn", F.col("u")).alias("v"))
+        .filter(F.col("u") != F.col("v"))
+        .dropDuplicates()
+    )
+    # small-star: each node attaches all its smaller neighbors (and
+    # itself) to the min of that set. large is already oriented
+    # big→small: its u is a neighbor above the old u, its v at most
+    # the old u
+    mins2 = large.groupBy("u").agg(F.min("v").alias("mn"))
+    joined = large.join(mins2, "u")
+    return (
+        joined.select(F.col("v").alias("u"), F.col("mn").alias("v"))
+        .unionAll(joined.select("u", F.col("mn").alias("v")))
+        .filter(F.col("u") != F.col("v"))
+        .dropDuplicates()
+    )
+
+
+def _edge_signature(e: DataFrame) -> tuple:
+    """Type-agnostic edge-set signature (ids may be strings); bit_xor
+    can't overflow under ANSI mode, unlike sum."""
+    return tuple(e.agg(F.count(F.lit(1)), F.bit_xor(F.xxhash64("u", "v"))).collect()[0])

@@ -18,16 +18,15 @@ per peel round:
      cycle resolve as singletons — a DAG fully resolves in one peel).
   3. peel resolved nodes + incident edges, repeat.
 
-Both loops run a BOUNDED number of rounds with an explicit fixed-
-point check: a phase "converged" iff its last round changed no row
-(both phases are monotone, so last-two-frames-equal ⇔ fixed point,
-and an engine-side early exit at the first no-change round produces
-byte-identical frames to running the full budget). A peel's
-resolutions are only valid when BOTH phases converged — partially
-propagated colors mis-class nodes, and partially propagated
-backward reach would peel a strict subset of an SCC, splitting the
-remainder into wrongly-labeled sub-components in later peels. When
-either phase exhausts its budget mid-flight the peel resolves
+Each phase runs through graph/iterate.fixpoint with at most ``rounds``
+rounds and an exact change test: a phase settled iff its last round
+changed no row. Both phases are monotone, so that is the fixed point,
+and stopping at the first no-change round gives the same frames as
+running the whole budget. A peel's resolutions are only valid when
+BOTH phases settled — partially propagated colors mis-class nodes, and
+partially propagated backward reach would peel a strict subset of an
+SCC, splitting the remainder into wrongly-labeled sub-components in
+later peels. When either phase exhausts its budget the peel resolves
 NOTHING and every still-active node comes back with scc NULL (the
 honest budget-exhaustion contract, same as k-truss' round cap). A
 SQL oracle replays the exact evolution CTE-by-CTE, including the
@@ -39,10 +38,45 @@ components.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window  # noqa: F401 (Window: API symmetry)
+from functools import partial
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from social_link_prediction_spark.graph.build import vertices
+from social_link_prediction_spark.graph.iterate import fixpoint
+
+
+def _forward(e: DataFrame, c: DataFrame) -> DataFrame:
+    """One color round: v takes max(c(u), c(v)) over its in-edges u→v."""
+    inc = (
+        e.join(c.select(F.col("id").alias("u"), F.col("c").alias("cu")), "u")
+        .groupBy(F.col("v").alias("id"))
+        .agg(F.max("cu").alias("cin"))
+    )
+    return c.join(inc, "id", "left").select(
+        "id", F.greatest(F.col("c"), F.coalesce("cin", "c")).alias("c")
+    )
+
+
+def _backward(ce: DataFrame, r: DataFrame) -> DataFrame:
+    """One reach round over same-class edges u→v: u reaches the class
+    root once some v it points at does."""
+    upd = (
+        ce.join(r.select(F.col("id").alias("v"), F.col("r").alias("rv")), "v")
+        .filter(F.col("rv") == 1)
+        .groupBy(F.col("u").alias("id"))
+        .agg(F.lit(1).alias("rin"))
+    )
+    return r.join(upd, "id", "left").select(
+        "id", "c", F.greatest(F.col("r"), F.coalesce("rin", F.lit(0))).alias("r")
+    )
+
+
+def _row_changed(col: str, prev: DataFrame, nxt: DataFrame) -> bool:
+    """Exact change test: some node's ``col`` differs between rounds."""
+    old = prev.select("id", F.col(col).alias("old"))
+    return nxt.join(old, "id").filter(F.col(col) != F.col("old")).limit(1).count() > 0
 
 
 def strongly_connected_components(
@@ -74,41 +108,12 @@ def strongly_connected_components(
     nodes = vertices(e, "u", "v").localCheckpoint()
     resolved: DataFrame | None = None
     active_n, active_e = nodes, e
-    for _ in range(peels):
+    for p in range(1, peels + 1):
         # --- 1. forward color propagation (max over ancestors)
         c = active_n.withColumn("c", F.col("id")).localCheckpoint()
-        fwd_converged = False
-        for _r in range(rounds):
-            inc = (
-                active_e.join(
-                    c.select(F.col("id").alias("u"), F.col("c").alias("cu")), "u"
-                )
-                .groupBy(F.col("v").alias("id"))
-                .agg(F.max("cu").alias("cin"))
-            )
-            nxt = (
-                c.join(inc, "id", "left")
-                .select(
-                    "id",
-                    F.greatest(F.col("c"), F.coalesce("cin", "c")).alias("c"),
-                )
-                .localCheckpoint()
-            )
-            # Monotone ⇒ "no row rose" is exactly the fixed point; the
-            # early break leaves `c` byte-identical to running out the
-            # budget, so the unrolled SQL oracle (which always runs
-            # `rounds` rounds and compares the last two) replays this.
-            changed = (
-                nxt.join(c.withColumnRenamed("c", "c0"), "id")
-                .filter(F.col("c") != F.col("c0"))
-                .limit(1)
-                .count()
-            )
-            c = nxt
-            if changed == 0:
-                fwd_converged = True
-                break
-        if not fwd_converged:
+        step, test = partial(_forward, active_e), partial(_row_changed, "c")
+        c, settled = fixpoint(c, step, test, rounds, f"scc/peel {p}/forward")
+        if not settled:
             # Budget exhausted mid-propagation: colors are partial ⇒
             # classes are wrong ⇒ nothing this peel (or any later peel
             # on the identical active set) may resolve.
@@ -122,36 +127,9 @@ def strongly_connected_components(
             .localCheckpoint()
         )
         r = c.withColumn("r", (F.col("id") == F.col("c")).cast("int")).localCheckpoint()
-        bwd_converged = False
-        for _r in range(rounds):
-            upd = (
-                ce.join(
-                    r.select(F.col("id").alias("v"), F.col("r").alias("rv")), "v"
-                )
-                .filter(F.col("rv") == 1)
-                .groupBy(F.col("u").alias("id"))
-                .agg(F.lit(1).alias("rin"))
-            )
-            nxt = (
-                r.join(upd, "id", "left")
-                .select(
-                    "id",
-                    "c",
-                    F.greatest(F.col("r"), F.coalesce("rin", F.lit(0))).alias("r"),
-                )
-                .localCheckpoint()
-            )
-            changed = (
-                nxt.join(r.select("id", F.col("r").alias("r0")), "id")
-                .filter(F.col("r") != F.col("r0"))
-                .limit(1)
-                .count()
-            )
-            r = nxt
-            if changed == 0:
-                bwd_converged = True
-                break
-        if not bwd_converged:
+        step, test = partial(_backward, ce), partial(_row_changed, "r")
+        r, settled = fixpoint(r, step, test, rounds, f"scc/peel {p}/backward")
+        if not settled:
             # Partial backward reach would peel a strict subset of an
             # SCC — later peels would then mislabel the remainder as
             # smaller components. Invalidate the whole peel instead.

@@ -19,11 +19,11 @@ edge list:
              so triangle-free edges drop too).
 
 Scale shape: the triangle join is the cost driver and shrinks
-monotonically every round (edges only ever drop). Per-round frames
-persist lazily; the loop exits when the edge count reaches a fixed
-point — on small-world graphs the peel depth is a handful of rounds.
-At 100 TB pre-bucket the edge table by src so the (a,a) self-join
-stage reuses the layout.
+monotonically every round (edges only ever drop). The rounds run
+through graph/iterate.fixpoint, which stops when the edge count
+reaches a fixed point — on small-world graphs the peel depth is a
+handful of rounds. At 100 TB pre-bucket the edge table by src so the
+(a,a) self-join stage reuses the layout.
 """
 
 from __future__ import annotations
@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from social_link_prediction_spark.graph.build import simple_edges
+from social_link_prediction_spark.graph.iterate import fixpoint, measure_changed
 
 
 def edge_support(e: DataFrame) -> DataFrame:
@@ -66,30 +67,27 @@ def ktruss(
     if k < 3:
         raise ValueError(f"k-truss requires k >= 3, got {k}")
     e = simple_edges(edges, src, dst).persist()
-    n = e.count()
-    sup = None
-    converged = False
-    for _ in range(max_rounds):
-        sup = edge_support(e)
-        kept = (
-            e.join(sup, ["src", "dst"], "left")
-            .filter(F.coalesce(F.col("support"), F.lit(0)) >= k - 2)
-            .select("src", "dst")
-            .localCheckpoint()
+    try:
+        # Each state carries the support its edges had before the peel
+        # that kept them; edges only drop, so an unchanged edge count is
+        # the fixed point, where that support is the final one.
+        t, settled = fixpoint(
+            e,
+            lambda t: _supported(t).filter(F.col("support") >= k - 2),
+            measure_changed(DataFrame.count, e.count()),
+            max_rounds,
+            "ktruss",
         )
-        n2 = kept.count()
-        if n2 == n:
-            e = kept
-            converged = True
-            break
-        e = kept
-        n = n2
-    # On the converged exit the last sup was computed over exactly the
-    # settled edge set (kept == e), so reuse it — the triangle join is
-    # the operator's cost driver. Recompute only when the round cap
-    # cut the peel short (e shrank after sup was taken).
-    if sup is None or not converged:
-        sup = edge_support(e)
-    return e.join(sup, ["src", "dst"], "left").select(
+    finally:
+        e.unpersist()
+    # at the round cap the last peel dropped edges after their support
+    # was counted, so count it again over the survivors
+    return t if settled else _supported(t)
+
+
+def _supported(e: DataFrame) -> DataFrame:
+    """(src, dst, support) for every canonical edge, 0 in no triangle."""
+    e = e.select("src", "dst")
+    return e.join(edge_support(e), ["src", "dst"], "left").select(
         "src", "dst", F.coalesce(F.col("support"), F.lit(0)).alias("support")
     )

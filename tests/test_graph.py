@@ -539,6 +539,51 @@ def test_betweenness_releases_its_frames(spark, cached_rdd_ids):
     assert {r.id: r.betweenness for r in out.collect()} == {2: 3.0, 3: 1.0, 4: 1.0}
 
 
+def test_fixpoint_names_each_round_and_restores_the_caller(spark):
+    """Every round of iterate.fixpoint runs under its own job
+    description inside the caller's job group; the caller's description
+    comes back after a fixed point, at the round cap and on error."""
+    from social_link_prediction_spark.graph import iterate
+
+    sc = spark.sparkContext
+    seen = []
+
+    def halve(df):
+        seen.append(
+            (sc.getLocalProperty("spark.job.description"), sc.getLocalProperty("spark.jobGroup.id"))
+        )
+        return df.select(F.shiftright("id", 1).alias("id"))
+
+    def first_id(df):
+        return df.first().id
+
+    sc.setJobGroup("fixpoint-names", "caller")
+    try:
+        # 8 -> 4 -> 2 -> 1 -> 0 -> 0: the fifth round changes nothing
+        start = spark.range(8, 9)
+        changed = iterate.measure_changed(first_id, 8)
+        out, settled = iterate.fixpoint(start, halve, changed, 9, "halve")
+        assert (out.first().id, settled) == (0, True)
+        assert seen == [(f"halve/round {r}", "fixpoint-names") for r in range(1, 6)]
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+        out, settled = iterate.fixpoint(start, halve, iterate.measure_changed(first_id), 2, "cap")
+        assert (out.first().id, settled) == (2, False)
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+
+        def fail(prev, nxt):
+            raise RuntimeError("test failed mid-round")
+
+        with pytest.raises(RuntimeError, match="mid-round"):
+            iterate.fixpoint(start, halve, fail, 3, "boom")
+        assert seen[-1] == ("boom/round 1", "fixpoint-names")
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+        assert iterate.fixpoint(start, halve, fail, 0, "none") == (start, False)
+        assert sc.statusTracker().getJobIdsForGroup("fixpoint-names")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
 # Degenerate inputs for the power-iteration family: an empty edge set,
 # a single self-loop, duplicate edges, and two components (one of them
 # directed, so pagerank's dangling and sourceless fixups both run).
@@ -747,7 +792,7 @@ def test_ktruss_clique_survives_path_peels(spark):
     assert all(r.support == 2 for r in out)
 
 
-def test_ktruss_cascading_peel_needs_multiple_rounds(spark):
+def test_ktruss_cascading_peel_needs_multiple_rounds(spark, cached_rdd_ids):
     # Triangle {1,2,3} plus edge (3,4) closed by (2,4): dropping the
     # weak edges cascades — (2,4)/(3,4) are in one triangle only, so a
     # 5-truss (support >= 3) empties the graph over several rounds,
@@ -757,9 +802,13 @@ def test_ktruss_cascading_peel_needs_multiple_rounds(spark):
     e = spark.createDataFrame(
         [(1, 2), (1, 3), (2, 3), (2, 4), (3, 4)], ["src", "dst"]
     )
+    before = cached_rdd_ids()
     assert gt.ktruss(e, k=5).count() == 0
     keep3 = gt.ktruss(e, k=3).collect()
     assert sorted((r.src, r.dst) for r in keep3) == [(1, 2), (1, 3), (2, 3), (2, 4), (3, 4)]
+    # the canonical edge set is pinned for the peel only; results read
+    # the peel's checkpoints
+    assert cached_rdd_ids() - before == set()
 
 
 def test_ktruss_rejects_small_k(spark):

@@ -507,7 +507,9 @@ def test_fixpoint_operator_job_counts(spark):
         "closure": jobs("fp-closure", lambda: gcl.transitive_closure(chain)),
         "cc": jobs("fp-cc", lambda: gpr.connected_components(path)),
     }
-    assert got == {"scc": 139, "k_core": 30, "ktruss": 21, "closure": 33, "cc": 53}
+    # ktruss: 21 jobs for its three rounds, then one to collect the
+    # last round's checkpoint, which already carries the support
+    assert got == {"scc": 139, "k_core": 30, "ktruss": 22, "closure": 33, "cc": 53}
 
 
 def test_decorated_path_search_job_count(spark):

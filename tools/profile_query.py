@@ -1,26 +1,27 @@
-"""Profile one catalog query: wall time split into Spark job time vs
-driver gaps (planning/overhead), per-job durations, and stage stats.
+"""Profile catalog queries: wall time split into Spark job time and
+driver gaps (planning, Python, scheduling), with the slow jobs and the
+long gaps between jobs listed.
 
 Usage: python tools/profile_query.py <query> [<query> ...]
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS.
 
-Uses a StatusTracker-free approach: a SparkListener via the py4j
-callback is flaky; instead we read the REST-ish status through
-sc.statusTracker after the run (job ids + times are not exposed), so
-the robust path is the event log. We enable spark.eventLog.enabled
-into a temp dir and parse the JSON lines after each query.
+Each query runs under its own Spark job group with the event log on.
+After the session stops, perfbench/eventlog.py reads the log and sums
+each group; every figure below comes from that group's job intervals
+and totals.
 """
 
 from __future__ import annotations
 
-import json
 import os
+import shutil
 import sys
 import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from perfbench.eventlog import GroupStats, find_log, read_events
 from social_link_prediction_spark import queries as catalog
 from social_link_prediction_spark.session import get_spark
 
@@ -39,102 +40,55 @@ def main() -> None:
             "spark.ui.showConsoleProgress": "false",
         },
     )
-    spark.sparkContext.setLogLevel("ERROR")
+    sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
 
     # warmup
     catalog.QUERIES["pricing_summary"](spark, sf_dir).write.format(
         "noop"
     ).mode("overwrite").save()
 
+    walls = {}
     for name in names:
-        fn = catalog.QUERIES[name]
-        spark.sparkContext.setJobDescription(name)
+        sc.setJobGroup(name, name)
         t0 = time.perf_counter()
-        df = fn(spark, sf_dir)
+        df = catalog.QUERIES[name](spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
-        wall = time.perf_counter() - t0
-        print(f"\n=== {name}: wall {wall:.2f}s ===")
-        report(evdir, spark.sparkContext.applicationId, t0_wall=wall, name=name)
-    spark.stop()
+        walls[name] = time.perf_counter() - t0
+    app_id = sc.applicationId
+    spark.stop()  # closes the event log
+    log = read_events(find_log(evdir, app_id))
+    shutil.rmtree(evdir, ignore_errors=True)
+    for name in names:
+        report(name, walls[name], log.groups.get(name))
 
 
-_seen_jobs: set[tuple[str, int]] = set()
-
-
-def report(evdir: str, app_id: str, t0_wall: float, name: str) -> None:
-    # event log file is <dir>/<app-id>[.inprogress]
-    path = None
-    for root, _dirs, files in os.walk(evdir):
-        for fn in files:
-            if app_id in fn and "crc" not in fn and "appstatus" not in fn:
-                path = os.path.join(root, fn)
-    if path is None:
-        print(f"  (no event log under {evdir}: {os.listdir(evdir)})")
-        return
-    jobs = {}
-    stages = {}
-    with open(path) as f:
-        for line in f:
-            try:
-                ev = json.loads(line)
-            except ValueError:
-                continue
-            e = ev.get("Event")
-            if e == "SparkListenerJobStart":
-                jid = ev["Job ID"]
-                jobs[jid] = {
-                    "start": ev["Submission Time"],
-                    "desc": ev.get("Properties", {}).get(
-                        "spark.job.description", ""
-                    ),
-                    "stages": len(ev.get("Stage Infos", [])),
-                }
-            elif e == "SparkListenerJobEnd":
-                jid = ev["Job ID"]
-                if jid in jobs:
-                    jobs[jid]["end"] = ev["Completion Time"]
-            elif e == "SparkListenerStageCompleted":
-                si = ev["Stage Info"]
-                sid = si["Stage ID"]
-                stages[sid] = {
-                    "name": si["Stage Name"].split("\n")[0][:60],
-                    "tasks": si["Number of Tasks"],
-                    "start": si.get("Submission Time"),
-                    "end": si.get("Completion Time"),
-                }
-    mine = {
-        j: v
-        for j, v in jobs.items()
-        if v.get("desc") == name and "end" in v and (name, j) not in _seen_jobs
-    }
-    for j in mine:
-        _seen_jobs.add((name, j))
-    if not mine:
+def report(name: str, wall: float, st: GroupStats | None) -> None:
+    print(f"\n=== {name}: wall {wall:.2f}s ===")
+    if st is None or not st.job_intervals:
         print("  (no jobs captured)")
         return
-    items = sorted(mine.items())
-    tmin = min(v["start"] for _, v in items)
-    tmax = max(v["end"] for _, v in items)
-    jtime = sum(v["end"] - v["start"] for _, v in items) / 1000.0
-    span = (tmax - tmin) / 1000.0
+    jobs = sorted(st.job_intervals)
+    jtime = sum(end - start for start, end in jobs)
+    span = max(end for _, end in jobs) - jobs[0][0]
     print(
-        f"  jobs: {len(items)}  job-time sum {jtime:.2f}s  span {span:.2f}s"
+        f"  jobs: {len(jobs)}  job-time sum {jtime:.2f}s  span {span:.2f}s"
         f"  driver-gap within span {max(span - jtime, 0):.2f}s"
-        f"  pre-first-job {t0_wall - span:.2f}s"
+        f"  pre-first-job {wall - span:.2f}s"
     )
-    # top jobs by duration
-    top = sorted(items, key=lambda kv: kv[1]["start"])
+    print(
+        f"  stages {st.stages}  tasks {st.tasks}"
+        f"  shuffle r/w {st.shuffle_read_bytes / 1e6:.1f}/{st.shuffle_write_bytes / 1e6:.1f} MB"
+        f"  executor cpu {st.executor_cpu_ns / 1e9:.2f}s"
+    )
+    # slow jobs and long gaps, in submission order
     prev_end = None
-    for j, v in top:
-        d = (v["end"] - v["start"]) / 1000.0
-        gap = (v["start"] - prev_end) / 1000.0 if prev_end else 0.0
-        prev_end = v["end"]
+    for i, (start, end) in enumerate(jobs):
+        gap = start - prev_end if prev_end is not None else 0.0
+        prev_end = end if prev_end is None else max(prev_end, end)
         flag = " <== gap" if gap > 0.3 else ""
-        if d > 0.2 or gap > 0.3:
-            print(
-                f"    job {j}: {d:6.2f}s  ({v['stages']} stages)"
-                f"  gap-before {gap:5.2f}s{flag}"
-            )
+        if end - start > 0.2 or gap > 0.3:
+            print(f"    job #{i}: {end - start:6.2f}s  gap-before {gap:5.2f}s{flag}")
 
 
 if __name__ == "__main__":

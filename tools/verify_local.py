@@ -6,6 +6,11 @@ an order-insensitive value hash (rows sorted, columns sorted by name,
 values stringified). Exit code 1 if any mismatch.
 
 Usage: python tools/verify_local.py [sf_dir] [name ...]
+
+Output is line-buffered, and a "run" line names each query and side
+(spark or duckdb) before it starts, so a stalled run shows where it
+stands. DuckDB spills into a temporary directory under the system
+temp dir, removed at exit, never into the working directory.
 """
 
 from __future__ import annotations
@@ -14,6 +19,7 @@ import hashlib
 import math
 import os
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -54,8 +60,10 @@ def value_hash(cols, rows):
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    sys.stdout.reconfigure(line_buffering=True)
     spark = get_spark("verify-local")
-    con = duckdb.connect()
+    spill = tempfile.TemporaryDirectory(prefix="verify-duckdb-")
+    con = duckdb.connect(config={"temp_directory": spill.name})
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(p):
@@ -71,6 +79,7 @@ def main():
     # name filter: no oracle may ever emit HUGEINT (or any other type
     # Spark can't produce). Fix is CAST(... AS BIGINT) in the oracle.
     hugeint = []
+    print(f"run   bind sweep over {len(oracles)} oracles")
     for name, sql in oracles.items():
         try:
             rel = con.sql(sql)
@@ -100,6 +109,7 @@ def main():
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        print(f"run   {name}: spark")
         t0 = time.perf_counter()
         try:
             sdf = fn(spark, sf_dir)
@@ -113,6 +123,7 @@ def main():
         if name not in oracles:
             print(f"ok    {name}: rows={len(srows)} t={timings[name]}s (no oracle — rows-only)")
             continue
+        print(f"run   {name}: duckdb")
         t1 = time.perf_counter()
         try:
             res = con.execute(oracles[name])
@@ -165,6 +176,8 @@ def main():
         else:
             print(f"PASS  {name}: rows={len(srows)} t={timings[name]}s")
     spark.stop()
+    con.close()
+    spill.cleanup()
     out_path = os.environ.get("VERIFY_TIMINGS_OUT")
     if out_path:
         import json
